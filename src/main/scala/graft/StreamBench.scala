@@ -32,7 +32,7 @@ object StreamBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
 
     // SPARK_GRAFT_STREAM_MODE=kinesis replays through the PutRecords
     // producer into an in-process protocol stub and streams both

@@ -1598,7 +1598,7 @@ object Dedup {
     * The fallback: collapse identical token SETS to one class
     * representative FIRST (one hash-keyed groupBy — the q4 exact-dedup
     * exchange), run the unchanged prefix-filter core
-    * ([[setSimPairsOnToks]]) over representatives only, then expand:
+    * ([[setSimPairsOnSets]]) over representatives only, then expand:
     * within a class every pair is (J = 1, inter = |set|) with no
     * verify join at all, and a cross-class representative pair's
     * (inter, jaccard) is inherited verbatim by every member pair

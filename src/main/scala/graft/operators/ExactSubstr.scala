@@ -103,7 +103,11 @@ object ExactSubstr {
           md.reset()
           hex(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
         }
-        var dh = words.iterator.map(md5s).toArray
+        // null text splits to a null array: no windows, as the old
+        // posexplode form
+        var dh =
+          if (words == null) Array.empty[String]
+          else words.iterator.map(md5s).toArray
         var h = 1
         while (h < k) {
           val n = math.max(dh.length - h, 0)

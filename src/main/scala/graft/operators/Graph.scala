@@ -262,10 +262,6 @@ object Graph {
           // write is a SECOND job over the round's plan unless it
           // reads a populated cache; localCheckpoint materializes
           // internally and needs no staging
-          // persist-before-checkpoint: the reliable variant's file
-          // write is a SECOND job over the round's plan unless it
-          // reads a populated cache; localCheckpoint materializes
-          // internally and needs no staging
           val staged = if (checkpointDir.isDefined) {
             val p = next.persist(level); p.count(); p
           } else next

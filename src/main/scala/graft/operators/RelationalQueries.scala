@@ -478,6 +478,8 @@ object RelationalQueries {
       k: Int = BasketTopK): DataFrame = {
     val baskets = lineitem
       .select(col("l_orderkey").as("oid"), col("l_partkey").as("item"))
+      // a lineitem with no order key belongs to no basket
+      .filter(col("oid").isNotNull)
       .groupBy(col("oid"))
       .agg(array_sort(collect_set(col("item"))).as("items"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -89,6 +89,20 @@ class ExactSubstrSpec extends AnyFunSuite with SparkSessionSpec {
     assert(out(1L).getAs[Long]("n_spans") == 0L)
   }
 
+  test("a null-text document yields no windows and no spans (the " +
+      "posexplode form's behavior), next to a real duplicate") {
+    import spark.implicits._
+    val docs = Seq[(Long, String)](
+      (1L, words("a", 5) + " " + dup20), (2L, dup20 + " " + words("b", 2)),
+      (3L, null)).toDF("doc_id", "text")
+    assert(ExactSubstr.windowDigests(docs, K)
+      .filter($"doc_id" === 3L).count() == 0L)
+    val got = ExactSubstr.exactSubstrSpans(docs).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("span_start"),
+        r.getAs[Long]("span_end"))).toSet
+    assert(got == Set((1L, 5L, 25L), (2L, 0L, 20L)))
+  }
+
   test("digest identity == direct window-string identity on the " +
       "graded fixture slice (the oracle states the rule on TEXT; " +
       "this pins the prefix-doubling digests against it in-engine)") {

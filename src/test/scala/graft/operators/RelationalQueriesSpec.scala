@@ -791,6 +791,25 @@ class RelationalQueriesSpec extends AnyFunSuite with SparkSessionSpec {
     assert(r.getAs[Long]("rank") == 1L)
   }
 
+  test("frequentItemPairs: null-key lineitems form no basket") {
+    import spark.implicits._
+    // baskets: {A,B} x3, {C,D}; the null-key rows A, B, C belong to
+    // no order, so they add no support, item count or basket
+    val li = Seq[(Option[Long], Long)](
+      (Some(1L), 100L), (Some(1L), 200L), (Some(2L), 100L),
+      (Some(2L), 200L), (Some(3L), 100L), (Some(3L), 200L),
+      (Some(4L), 300L), (Some(4L), 400L),
+      (None, 100L), (None, 200L), (None, 300L))
+      .toDF("l_orderkey", "l_partkey")
+    val out = RelationalQueries.frequentItemPairs(li).collect()
+    assert(out.length == 1)
+    val r = out.head
+    assert(r.getAs[Long]("ia") == 100L && r.getAs[Long]("ib") == 200L)
+    assert(r.getAs[Long]("support") == 3L)
+    // lift = 4 baskets * 3 / (3 * 3)
+    assert(math.abs(r.getAs[Double]("lift") - 4.0 / 3) < 1e-15)
+  }
+
   test("frequentItemPairs fixture: every pair clears the floor, " +
       "ranks contiguous, support non-increasing") {
     val li = spark.read

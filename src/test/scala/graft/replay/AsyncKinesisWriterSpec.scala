@@ -209,7 +209,7 @@ class AsyncKinesisWriterSpec extends AnyFunSuite with SparkSessionSpec {
       } finally w.close()
 
       import graft.streaming.StreamingTaxi
-      StreamingTaxi.configureStateStore(spark)
+      StreamingTaxi.configureStreamingSession(spark)
       val cpA = Files.createTempDirectory("kin-e2e-cpA").toString
       val cpB = Files.createTempDirectory("kin-e2e-cpB").toString
       val viaKinesis = EventCodec.strictTyped(

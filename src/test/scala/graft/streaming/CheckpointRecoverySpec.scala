@@ -32,50 +32,88 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSessionSpec {
       s""""dropoff_lon": ${d.lonCenter}, "total_amount": 1.0}"""
   }
 
+  private val ChangelogConf =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Stop a Q1 query mid-stream (phase 1), resume a NEW query from the
+    * same checkpoint (phase 2), and return the number of indexed
+    * documents. Both phases run with the shared set-up, except that
+    * `changelogBefore = false` turns changelog checkpointing off for
+    * phase 1 (a checkpoint written before it was the default). The
+    * session's changelog setting is restored afterwards. */
+  private def crashAndResume(changelogBefore: Boolean): Long = {
+    val saved = spark.conf.getOption(ChangelogConf)
+    try {
+      val cp = Files.createTempDirectory("cp-recover").toString
+      val indexDir = Files.createTempDirectory("index").toString
+      val writerFn = BulkIndexSink.foreachBatchWriter(
+        Seq("location", "timestamp"), new LocalDirTransport(indexDir))
+
+      // phase 1: first half of the fixture, then stop (simulated crash)
+      StreamingTaxi.configureStreamingSession(spark)
+      if (!changelogBefore) spark.conf.set(ChangelogConf, "false")
+      val ms1 = MemoryStream[String]
+      val q1a = StreamingTaxi.q1(StreamingTaxi.tripStream(
+        EventCodec.parseEvents(ms1.toDF().toDF("value"))))
+      val run1 = StreamingTaxi.writer(q1a, cp,
+          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+        .foreachBatch(writerFn).start()
+      val (half1, half2) = fixtureLines.splitAt(8)
+      ms1.addData(half1: _*)
+      run1.processAllAvailable()
+      run1.stop()
+      assert(stateFiles(cp).exists(_.getName.endsWith(".changelog")) ==
+        changelogBefore)
+
+      // phase 2: new query, same checkpoint, rest of the data + flushes.
+      // A MemoryStream source resumes from its recorded offset, so the
+      // new stream must replay half1 (offset 0 was consumed pre-crash —
+      // re-adding it exercises the sink's idempotence) plus half2.
+      StreamingTaxi.configureStreamingSession(spark)
+      val ms2 = MemoryStream[String]
+      ms2.addData(half1: _*)
+      val q1b = StreamingTaxi.q1(StreamingTaxi.tripStream(
+        EventCodec.parseEvents(ms2.toDF().toDF("value"))))
+      val run2 = StreamingTaxi.writer(q1b, cp,
+          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+        .foreachBatch(writerFn).start()
+      ms2.addData(half2: _*)
+      run2.processAllAvailable()
+      ms2.addData(flushLine("2016-02-01T00:00:00.000Z"))
+      run2.processAllAvailable()
+      ms2.addData(flushLine("2016-02-01T01:00:00.000Z"))
+      run2.processAllAvailable()
+      run2.stop()
+      assert(stateFiles(cp).exists(_.getName.endsWith(".changelog")))
+
+      new java.io.File(indexDir).listFiles()
+        .count(_.getName.endsWith(".json")).toLong
+    } finally saved match {
+      case Some(v) => spark.conf.set(ChangelogConf, v)
+      case None => spark.conf.unset(ChangelogConf)
+    }
+  }
+
+  private def stateFiles(cp: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(s"$cp/state"))
+  }
+
+  /** The batch Q1 result the index must equal — no dupes, no loss. */
+  private lazy val batchQ1: Long =
+    TaxiQueries.q1PickupHotspots(TaxiQueries.validNycTrips(
+      EventCodec.parseEvents(fixtureLines.toDF("value")))).count()
+
   test("restart from checkpoint recovers window state; idempotent sink dedups") {
-    StreamingTaxi.configureStateStore(spark)
-    val cp = Files.createTempDirectory("cp-recover").toString
-    val indexDir = Files.createTempDirectory("index").toString
-    val writerFn = BulkIndexSink.foreachBatchWriter(
-      Seq("location", "timestamp"), new LocalDirTransport(indexDir))
+    val indexed = crashAndResume(changelogBefore = true)
+    assert(indexed == batchQ1)
+    assert(indexed > 0)
+  }
 
-    // phase 1: first half of the fixture, then stop (simulated crash)
-    val ms1 = MemoryStream[String]
-    val q1a = StreamingTaxi.q1(StreamingTaxi.tripStream(
-      EventCodec.parseEvents(ms1.toDF().toDF("value"))))
-    val run1 = StreamingTaxi.writer(q1a, cp,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .foreachBatch(writerFn).start()
-    val (half1, half2) = fixtureLines.splitAt(8)
-    ms1.addData(half1: _*)
-    run1.processAllAvailable()
-    run1.stop()
-
-    // phase 2: new query, same checkpoint, rest of the data + flushes.
-    // A MemoryStream source resumes from its recorded offset, so the
-    // new stream must replay half1 (offset 0 was consumed pre-crash —
-    // re-adding it exercises the sink's idempotence) plus half2.
-    val ms2 = MemoryStream[String]
-    ms2.addData(half1: _*)
-    val q1b = StreamingTaxi.q1(StreamingTaxi.tripStream(
-      EventCodec.parseEvents(ms2.toDF().toDF("value"))))
-    val run2 = StreamingTaxi.writer(q1b, cp,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .foreachBatch(writerFn).start()
-    ms2.addData(half2: _*)
-    run2.processAllAvailable()
-    ms2.addData(flushLine("2016-02-01T00:00:00.000Z"))
-    run2.processAllAvailable()
-    ms2.addData(flushLine("2016-02-01T01:00:00.000Z"))
-    run2.processAllAvailable()
-    run2.stop()
-
-    // the index holds exactly the batch Q1 result — no dupes, no loss
-    val batch = TaxiQueries.q1PickupHotspots(TaxiQueries.validNycTrips(
-        EventCodec.parseEvents(fixtureLines.toDF("value")))).count()
-    val indexed = new java.io.File(indexDir).listFiles()
-      .count(_.getName.endsWith(".json"))
-    assert(indexed == batch)
+  test("a checkpoint written without changelogs restarts with them on") {
+    val indexed = crashAndResume(changelogBefore = false)
+    assert(indexed == batchQ1)
     assert(indexed > 0)
   }
 }

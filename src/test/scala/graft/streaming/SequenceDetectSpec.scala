@@ -31,7 +31,7 @@ class SequenceDetectSpec extends AnyFunSuite with SparkSessionSpec {
   private val fixture = batch1 ++ batch2
 
   test("streamed conversions equal the batch operator, out of order") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, String, Long)]
     val out = SequenceDetect.clickToPurchase(
       ms.toDF().toDF("user_id", "event_type", "ts_ms"),

@@ -41,7 +41,7 @@ class StreamingIntervalJoinSpec extends AnyFunSuite with SparkSessionSpec {
   test("stream-stream interval join: pairs spanning micro-batches " +
       "equal the batch range join; horizon closed at the boundary, " +
       "open 1 ms past it") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, Long, String, Long, Double)]
     val out = StreamingIntervalJoin.clickPurchasePairs(frame(ms.toDF()))
     val query = out.writeStream
@@ -86,7 +86,7 @@ class StreamingIntervalJoinSpec extends AnyFunSuite with SparkSessionSpec {
   test("QUANTIFIED late-data divergence (q187): rows later than the " +
       "watermark delay lose exactly their own pairs; rows late but " +
       "within the delay diverge not at all") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val Min = 60000L
     val delayMs = 10 * Min // the operator default "10 minutes"
     // wave 1 establishes the watermark frontier: sentinel user 9's
@@ -154,7 +154,7 @@ class StreamingIntervalJoinSpec extends AnyFunSuite with SparkSessionSpec {
   test("QUANTIFIED late-data divergence (q196, LEFT OUTER): the " +
       "beyond-delay purchase's pair degrades to the click's null " +
       "row — divergence is the pair/null swap, nothing else") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val Min = 60000L
     val delayMs = 10 * Min
     val frontierMs = 9 * Hr - delayMs
@@ -207,7 +207,7 @@ class StreamingIntervalJoinSpec extends AnyFunSuite with SparkSessionSpec {
   test("LEFT OUTER stream-stream join (q196): matched pairs emit " +
       "eagerly, an unmatched click emits its null row only when the " +
       "watermark passes its horizon, an unexpired click emits nothing") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, Long, String, Long, Double)]
     val out = StreamingIntervalJoin.clickPurchasePairsOuter(
       frame(ms.toDF()))

@@ -27,7 +27,7 @@ class StreamingStateBoundsSpec extends AnyFunSuite with SparkSessionSpec {
     stateRows(q).lastOption.getOrElse(-1L)
 
   test("SequenceDetect state is evicted once the watermark passes") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val H = 3600000L
     val ms = MemoryStream[(Long, String, Long)]
     val out = SequenceDetect.clickToPurchase(
@@ -58,7 +58,7 @@ class StreamingStateBoundsSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("StreamingTrailing state is evicted once the watermark passes") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val H = 3600000L
     val ms = MemoryStream[(Long, Long, Long, Double)]
     val out = StreamingTrailing.trailingHourStats(
@@ -86,7 +86,7 @@ class StreamingStateBoundsSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("StreamingDedup bucket state is evicted by the processing-time TTL") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, String)]
     // short TTL; ProcessingTimeTimeout makes the engine schedule
     // no-data batches that fire the timeouts, so we poll lastProgress

@@ -37,7 +37,7 @@ class StreamingTaxiSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("file-source streaming decodes the wire fixture (S1+S2)") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val dir = tmp("stream-in")
     Files.writeString(java.nio.file.Paths.get(s"$dir/part-0.jsonl"),
       fixtureLines.mkString("", "\n", "\n"))
@@ -49,8 +49,37 @@ class StreamingTaxiSpec extends AnyFunSuite with SparkSessionSpec {
     assert(spark.table("file_trips").count() == 9)
   }
 
+  test("a restarted query reuses the generated code of the first run") {
+    StreamingTaxi.configureStreamingSession(spark)
+    val dir = tmp("stream-in")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/part-0.jsonl"),
+      (fixtureLines :+ flushLine("2016-02-01T00:00:00.000Z"))
+        .mkString("", "\n", "\n"))
+    // the same Q1 plan twice, each on a fresh checkpoint: the second
+    // start runs the identical batch sequence, so every class it
+    // needs is already compiled
+    def drain(name: String): Set[org.apache.spark.sql.Row] = {
+      val q = StreamingTaxi.runToMemory(StreamingTaxi.q1(
+        StreamingTaxi.tripStream(StreamingTaxi.fromJsonFiles(spark, dir))),
+        name, tmp("cp"))
+      q.awaitTermination()
+      assert(q.recentProgress.map(_.numInputRows).sum > 0L)
+      spark.table(name).collect().toSet
+    }
+    // the compile counter is JVM-wide: no other query may be running
+    // while it is read
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val first = drain("q1_codegen_a")
+    assert(spark.streams.active.isEmpty)
+    val before = compiles.getCount
+    val second = drain("q1_codegen_b")
+    assert(compiles.getCount == before)
+    assert(second == first)
+  }
+
   test("streaming Q1 (RocksDB state, append mode) equals batch Q1") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[String]
     val events = EventCodec.parseEvents(ms.toDF().toDF("value"))
     val q1 = StreamingTaxi.q1(StreamingTaxi.tripStream(events))

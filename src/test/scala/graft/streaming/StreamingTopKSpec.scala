@@ -49,7 +49,7 @@ class StreamingTopKSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("streamed per-window top-k equals the batch TopKPerGroup operator") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, String, Long, Double)]
     val out = StreamingTopK.topKPerWindow(
       ms.toDF().toDF("event_id", "event_type", "ts_ms", "value")
@@ -94,7 +94,7 @@ class StreamingTopKSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("StreamingTopK restart from checkpoint: windows spanning the stop finalize once, merged") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val cp = Files.createTempDirectory("topk-restart-cp").toString
     def build(ms: MemoryStream[(Long, String, Long, Double)]) =
       StreamingTopK.topKPerWindow(
@@ -153,7 +153,7 @@ class StreamingTopKSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("StreamingTopK state is bounded at k and evicted on window close") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, String, Long, Double)]
     val out = StreamingTopK.topKPerWindow(
       ms.toDF().toDF("event_id", "event_type", "ts_ms", "value")

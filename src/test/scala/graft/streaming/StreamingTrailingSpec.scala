@@ -34,7 +34,7 @@ class StreamingTrailingSpec extends AnyFunSuite with SparkSessionSpec {
   private val fixture = batch1 ++ batch2
 
   test("streamed trailing-hour stats equal the batch RANGE frame") {
-    StreamingTaxi.configureStateStore(spark)
+    StreamingTaxi.configureStreamingSession(spark)
     val ms = MemoryStream[(Long, Long, Long, Double)]
     val out = StreamingTrailing.trailingHourStats(
       ms.toDF().toDF("user_id", "event_id", "ts_ms", "value"),
