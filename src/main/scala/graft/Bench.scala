@@ -290,8 +290,11 @@ object Bench {
       // lineage-cut build frames feeding the lazy result) otherwise
       // survive to ContextCleaner GC and pile storage pressure onto
       // every later query (guide §5). The query is over; sweep them.
-      // Runs AFTER the timed region — measurement methodology
-      // unchanged.
+      // The sweep takes EVERY persistent RDD, so it relies on one
+      // invariant: no frame may stay persisted (or locally
+      // checkpointed) from one query to the next; a frame shared
+      // across queries would lose its data here. Runs AFTER the timed
+      // region — measurement methodology unchanged.
       val leftovers = spark.sparkContext.getPersistentRDDs
       if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
         System.err.println(s"[bench-debug] $name leakedRdds=${leftovers.size} " +

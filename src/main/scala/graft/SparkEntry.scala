@@ -3,8 +3,10 @@ package graft
 import graft.operators.{Dedup, EventsQueries, RelationalQueries, Similarity, TaxiQueries, TextAnalysis}
 import graft.oracle.OracleSql
 import graft.sources.SyntheticTrips
+import graft.util.FileWaves
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -246,25 +248,11 @@ object SparkEntry {
       val docs = all.filter(col("doc_id") >= 20L)
         .select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs.create("graft-decontam-q237")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
       val outDir = s"$wh/out"
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       // batch-id-named subdirectories make the sink idempotent: a
       // retried micro-batch OVERWRITES its own directory instead of
       // appending duplicate rows (the others use memory tables or
@@ -537,26 +525,11 @@ object SparkEntry {
       val ev = EventsQueries.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
       val wh = graft.util.TempDirs.create("graft-sketch-q339")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = ev.agg(min(col("event_id")).as("mn"),
         max(col("event_id")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("event_id") <= b1,
-        col("event_id") > b1 && col("event_id") <= b2,
-        col("event_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("event_id"),
+        bounds.getLong(0), bounds.getLong(1)).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q339_sketch")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         RelationalQueries.sketchQuantiles(stream)
@@ -812,12 +785,9 @@ object SparkEntry {
       val wh = graft.util.TempDirs
         .create("graft-lsh-q92")
       // three deterministic arrival waves, one file each
-      (0 until 3).foreach { w =>
-        emb.filter(col("vec_id") % 3 === w).coalesce(1)
-          .write.mode("append").parquet(s"$wh/in")
-      }
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        (0 until 3).map(w => emb.filter(col("vec_id") % 3 === w)))
+      val stream = FileWaves.read(s, emb.schema, s"$wh/in")
       s.sql("DROP TABLE IF EXISTS graft_lsh_idx_q92")
       val q = streaming.StreamingLshIndex.maintain(stream,
         "graft_lsh_idx_q92", s"$wh/idx", checkpoint = s"$wh/cp")
@@ -884,27 +854,11 @@ object SparkEntry {
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs
         .create("graft-funnel-q105")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      // distinct ascending mtimes pin the file-source processing
-      // order (the source sorts by modification time) — arrival order
-      // IS the parity contract, so it must not hang on write timing
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      // arrival order IS the parity contract (FileWaves pins it)
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       Seq("graft_q105_flags", "graft_q105_pairs")
         .foreach(s.catalog.dropTempView(_))
       val (qf, qp) = graft.util.StreamScale
@@ -1009,20 +963,9 @@ object SparkEntry {
       val emb = Similarity.embeddings(s, dir)
       val wh = graft.util.TempDirs
         .create("graft-knn-q123")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(0 until 3) { w =>
-        val tmp = s"$wh/w$w"
-        emb.filter(col("vec_id") % 3 === w).coalesce(1)
-          .write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        (0 until 3).map(w => emb.filter(col("vec_id") % 3 === w)))
+      val stream = FileWaves.read(s, emb.schema, s"$wh/in")
       s.sql("DROP TABLE IF EXISTS graft_knn_idx_q123")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingKnnGraph.maintain(stream,
@@ -1092,24 +1035,10 @@ object SparkEntry {
       val docs = all.select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs
         .create("graft-quality-q118")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q118_scores")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingQuality.nbScore(stream, model)
@@ -1166,24 +1095,10 @@ object SparkEntry {
     "q183_stream_paragraph_dedup" -> ((s, dir) => {
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs.create("graft-para-q183")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q183_kept")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingDedup.paragraphFirstOccurrences(stream)
@@ -1203,24 +1118,10 @@ object SparkEntry {
     "q191_stream_novelty" -> ((s, dir) => {
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs.create("graft-novel-q191")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q191_claims")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingDedup.shingleFirstOccurrences(stream)
@@ -1343,25 +1244,11 @@ object SparkEntry {
           col("props"))
       val wh = graft.util.TempDirs
         .create("graft-scd2-q143")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = ev.agg(min(col("ts_ms")).as("mn"),
         max(col("ts_ms")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("ts_ms") <= b1,
-        col("ts_ms") > b1 && col("ts_ms") <= b2, col("ts_ms") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("ts_ms"),
+        bounds.getLong(0), bounds.getLong(1)).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q143_dim")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingScd2.dimension(stream).toDF()
@@ -1432,25 +1319,11 @@ object SparkEntry {
           col("event_type"))
       val wh = graft.util.TempDirs
         .create("graft-markov-q153")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = ev.agg(min(col("ts_ms")).as("mn"),
         max(col("ts_ms")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("ts_ms") <= b1,
-        col("ts_ms") > b1 && col("ts_ms") <= b2, col("ts_ms") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("ts_ms"),
+        bounds.getLong(0), bounds.getLong(1)).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q153_pairs")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingMarkov.transitions(stream).toDF()
@@ -1480,25 +1353,11 @@ object SparkEntry {
       val ev = evAll.select(col("ts_ms"), col("event_type"))
       val wh = graft.util.TempDirs
         .create("graft-cusum-q156")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = ev.agg(min(col("ts_ms")).as("mn"),
         max(col("ts_ms")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("ts_ms") <= b1,
-        col("ts_ms") > b1 && col("ts_ms") <= b2, col("ts_ms") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("ts_ms"),
+        bounds.getLong(0), bounds.getLong(1)).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q156_hours")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingCusum.monitor(stream, stats).toDF()
@@ -1519,25 +1378,11 @@ object SparkEntry {
       val ev = evAll.select(col("ts_ms"), col("event_type"))
       val wh = graft.util.TempDirs
         .create("graft-ph-q260")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = ev.agg(min(col("ts_ms")).as("mn"),
         max(col("ts_ms")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("ts_ms") <= b1,
-        col("ts_ms") > b1 && col("ts_ms") <= b2, col("ts_ms") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("ts_ms"),
+        bounds.getLong(0), bounds.getLong(1)).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q260_hours")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingPageHinkley.monitor(stream, stats)
@@ -1588,25 +1433,11 @@ object SparkEntry {
           col("props"))
       val wh = graft.util.TempDirs
         .create("graft-pit-q162")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = ev.agg(min(col("ts_ms")).as("mn"),
         max(col("ts_ms")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("ts_ms") <= b1,
-        col("ts_ms") > b1 && col("ts_ms") <= b2, col("ts_ms") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("ts_ms"),
+        bounds.getLong(0), bounds.getLong(1)).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q162_serve")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingScd2.serveFetch(stream).toDF()
@@ -1693,26 +1524,13 @@ object SparkEntry {
       val raw = s.read.parquet(s"$dir/events.parquet")
       val ev = operators.EventsQueries.withTsMs(raw)
       val wh = graft.util.TempDirs.create("graft-join-q187")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val mm = ev.agg(min(col("ts_ms")), max(col("ts_ms"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val t1 = lo + (hi - lo) / 3; val t2 = lo + 2 * (hi - lo) / 3
-      val waves = Seq(col("ts_ms") <= t1,
-        col("ts_ms") > t1 && col("ts_ms") <= t2, col("ts_ms") > t2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).select(raw.columns.map(col).toIndexedSeq: _*)
-          .coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("ts_ms"), mm.getLong(0), mm.getLong(1))
+          .map(p => ev.filter(p)
+            .select(raw.columns.map(col).toIndexedSeq: _*)))
       val stream = operators.EventsQueries.withTsMs(
-        s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$wh/in"))
+        FileWaves.read(s, raw.schema, s"$wh/in"))
       s.catalog.dropTempView("graft_q187_pairs")
       // state partitions sized from the wave bytes, not the core
       // count (StreamScale — the r17 stateCommit profile); the block
@@ -1738,10 +1556,8 @@ object SparkEntry {
       val raw = s.read.parquet(s"$dir/events.parquet")
       val ev = operators.EventsQueries.withTsMs(raw)
       val wh = graft.util.TempDirs.create("graft-join-q196")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val mm = ev.agg(min(col("ts_ms")), max(col("ts_ms"))).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val t1 = lo + (hi - lo) / 3; val t2 = lo + 2 * (hi - lo) / 3
       val flushMs = hi +
         streaming.StreamingIntervalJoin.HorizonMs + 3600000L
       import s.implicits._
@@ -1758,24 +1574,11 @@ object SparkEntry {
         .select(col("event_id"), tsFromMs(col("ms")).as("ts"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .select(raw.columns.map(col).toIndexedSeq: _*)
-      val waves = Seq(
-        ev.filter(col("ts_ms") <= t1),
-        ev.filter(col("ts_ms") > t1 && col("ts_ms") <= t2),
-        ev.filter(col("ts_ms") > t2)).map(
-          _.select(raw.columns.map(col).toIndexedSeq: _*)) :+ flush
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (w, i) =>
-        val tmp = s"$wh/w$i"
-        w.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$i%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + i * 2000L)
-      }
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("ts_ms"), lo, hi).map(p => ev.filter(p)
+          .select(raw.columns.map(col).toIndexedSeq: _*)) :+ flush)
       val stream = operators.EventsQueries.withTsMs(
-        s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$wh/in"))
+        FileWaves.read(s, raw.schema, s"$wh/in"))
       s.catalog.dropTempView("graft_q196_pairs")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingIntervalJoin
@@ -2011,19 +1814,9 @@ object SparkEntry {
             .otherwise(col("text")))
         .select(col("doc_id"), col("run"), col("snap_text"))
       val wh = graft.util.TempDirs.create("graft-revisit-q272")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(Seq(0, 1)) { w =>
-        val tmp = s"$wh/w$w"
-        snaps.filter(col("run") === w).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(snaps.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        Seq(0, 1).map(w => snaps.filter(col("run") === w)))
+      val stream = FileWaves.read(s, snaps.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q272_revisit")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingRevisit.detect(stream).toDF()
@@ -2040,25 +1833,11 @@ object SparkEntry {
     "q271_stream_cdx" -> ((s, dir) => {
       val recs = operators.Warc.warcRecords(documents(s, dir))
       val wh = graft.util.TempDirs.create("graft-cdx-q271")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = recs.agg(min(col("doc_id")).as("mn"),
         max(col("doc_id")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2, col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        recs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(recs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("doc_id"),
+        bounds.getLong(0), bounds.getLong(1)).map(recs.filter(_)))
+      val stream = FileWaves.read(s, recs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q271_cdx")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingCdx.index(stream).toDF()
@@ -2078,25 +1857,11 @@ object SparkEntry {
     "q295_stream_web_funnel" -> ((s, dir) => {
       val recs = operators.Warc.warcRecords(documents(s, dir))
       val wh = graft.util.TempDirs.create("graft-funnel-q295")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = recs.agg(min(col("doc_id")).as("mn"),
         max(col("doc_id")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2, col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        recs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(recs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("doc_id"),
+        bounds.getLong(0), bounds.getLong(1)).map(recs.filter(_)))
+      val stream = FileWaves.read(s, recs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q295_funnel")
       val q = operators.Warc.streamWebFunnel(stream)
         .writeStream.outputMode("append")
@@ -2112,25 +1877,11 @@ object SparkEntry {
     "q330_stream_coding_stack" -> ((s, dir) => {
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs.create("graft-coding-q330")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val bounds = docs.agg(min(col("doc_id")).as("mn"),
         max(col("doc_id")).as("mx")).head()
-      val mn = bounds.getLong(0); val mx = bounds.getLong(1)
-      val b1 = mn + (mx - mn) / 3; val b2 = mn + 2 * (mx - mn) / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2, col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", FileWaves.thirds(col("doc_id"),
+        bounds.getLong(0), bounds.getLong(1)).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q330_coding")
       val q = operators.Warc.streamCodingStack(stream)
         .writeStream.outputMode("append")
@@ -2304,24 +2055,10 @@ object SparkEntry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       benchFps.count()
       val wh = graft.util.TempDirs.create("graft-funnel-q246")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       Seq("graft_q246_flags", "graft_q246_pairs")
         .foreach(s.catalog.dropTempView(_))
       val hitsDir = s"$wh/hits"
@@ -2409,18 +2146,13 @@ object SparkEntry {
     "q222_stream_paragraph_deferred" -> ((s, dir) => {
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs.create("graft-para-q222")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
       // REVERSED: the high-id third lands first
-      val waves = Seq(col("doc_id") > b2,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") <= b1)
+      val waves = FileWaves.thirds(col("doc_id"), 0L, maxId).reverse
       // deterministic EVENT time (graded path: no wall clock in the
       // data); file mtimes only order the file stream's pickup
       val evBase = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
         .getTime
-      val mtBase = System.currentTimeMillis() - 60000L
       val punct = Seq(
         (-1L, (1 to 8).map(i => s"zzpunct1w$i").mkString(" "),
           new java.sql.Timestamp(evBase + 3600L * 1000)),
@@ -2434,17 +2166,8 @@ object SparkEntry {
         Seq(row).toDF("doc_id", "text", "ts")
           .select(col("doc_id"), col("text"), col("ts"))
       }
-      graft.util.Par.foreach(waveFrames.zipWithIndex) { case (df, w) =>
-        val tmp = s"$wh/w$w"
-        df.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(mtBase + w * 2000L)
-      }
-      val stream = s.readStream.schema(waveFrames.head.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in", waveFrames)
+      val stream = FileWaves.read(s, waveFrames.head.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q222_kept")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingDedup.paragraphCanonicalDeferred(stream)
@@ -2512,25 +2235,11 @@ object SparkEntry {
     "q184_stream_epoch_schedule" -> ((s, dir) => {
       val docs = documents(s, dir)
       val wh = graft.util.TempDirs.create("graft-epoch-q184")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val cols = docs.select(col("doc_id"), col("source"), col("text"))
       val maxId = cols.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        cols.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(cols.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(cols.filter(_)))
+      val stream = FileWaves.read(s, cols.schema, s"$wh/in")
       val m = new streaming.StreamingSchedule.EpochPlanMaintainer(s)
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         operators.Sampling.sourceTokenCounts(stream)
@@ -2598,24 +2307,10 @@ object SparkEntry {
     "q206_stream_boilerplate" -> ((s, dir) => {
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val wh = graft.util.TempDirs.create("graft-boiler-q206")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("doc_id") <= b1,
-        col("doc_id") > b1 && col("doc_id") <= b2,
-        col("doc_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        docs.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("doc_id"), 0L, maxId).map(docs.filter(_)))
+      val stream = FileWaves.read(s, docs.schema, s"$wh/in")
       s.catalog.dropTempView("graft_q206_cuts")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         streaming.StreamingDedup.paragraphBoilerplateCuts(stream)
@@ -2669,24 +2364,10 @@ object SparkEntry {
         .select(col("event_id"), col("event_type"), col("ts_ms"),
           col("value"))
       val wh = graft.util.TempDirs.create("graft-trend-q214")
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
       val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-      val b1 = maxId / 3; val b2 = 2 * maxId / 3
-      val waves = Seq(col("event_id") <= b1,
-        col("event_id") > b1 && col("event_id") <= b2,
-        col("event_id") > b2)
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(waves.zipWithIndex) { case (p, w) =>
-        val tmp = s"$wh/w$w"
-        ev.filter(p).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        FileWaves.thirds(col("event_id"), 0L, maxId).map(ev.filter(_)))
+      val stream = FileWaves.read(s, ev.schema, s"$wh/in")
       val m = new streaming.StreamingTrend.TrendMaintainer(s)
       // state partitions sized from wave bytes (StreamScale): the
       // update-mode daily-cents aggregate keeps ~|types|×|days| state
@@ -2717,20 +2398,10 @@ object SparkEntry {
         .withColumn("bucket", col("doc_id") % Pipeline.MergeBuckets)
         .write.partitionBy("bucket").parquet(tableDir)
       val cdc = Pipeline.cdcFromDiff(docs)
-      val inDir = new java.io.File(s"$wh/in"); inDir.mkdirs()
-      val base = System.currentTimeMillis() - 60000L
-      graft.util.Par.foreach(0 until 3) { w =>
-        val tmp = s"$wh/w$w"
-        cdc.filter(col("doc_id") % 3 === w).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"wave$w%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(base + w * 2000L)
-      }
-      val stream = s.readStream.schema(
-          "doc_id BIGINT, op STRING, new_text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in")
+      FileWaves.write(s"$wh/in",
+        (0 until 3).map(w => cdc.filter(col("doc_id") % 3 === w)))
+      val stream = FileWaves.read(s, StructType.fromDDL(
+        "doc_id BIGINT, op STRING, new_text STRING"), s"$wh/in")
       val q = graft.util.StreamScale.withStatePartitions(s, s"$wh/in") {
         stream.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -2759,25 +2430,13 @@ object SparkEntry {
       val (v1, v2, v3) = Pipeline.timeTravelVersions(docs)
       v1.withColumn("bucket", col("doc_id") % Pipeline.MergeBuckets)
         .write.partitionBy("bucket").parquet(tableDir)
-      val base = System.currentTimeMillis() - 60000L
-      def waves(inDir: String, cdc: DataFrame): Unit = {
-        val in = new java.io.File(inDir); in.mkdirs()
-        graft.util.Par.foreach(0 until 2) { w =>
-          val tmp = s"$inDir-w$w"
-          cdc.filter(col("doc_id") % 2 === w).coalesce(1)
-            .write.parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(in, f"wave$w%03d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(base + w * 2000L)
-        }
-      }
+      def waves(inDir: String, cdc: DataFrame): Unit =
+        FileWaves.write(inDir,
+          (0 until 2).map(w => cdc.filter(col("doc_id") % 2 === w)))
       // epoch 1: pre-boundary schema — no lang column exists
       waves(s"$wh/in1", Pipeline.cdcBetween(v1, v2))
-      val q1 = s.readStream
-        .schema("doc_id BIGINT, op STRING, new_text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in1")
+      val q1 = FileWaves.read(s, StructType.fromDDL(
+          "doc_id BIGINT, op STRING, new_text STRING"), s"$wh/in1")
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Pipeline.mergeApplyTable(s, tableDir, batch)
@@ -2790,10 +2449,9 @@ object SparkEntry {
         .withColumn("new_lang", when(col("op") === "upsert",
           Pipeline.evolvedLangCol(col("doc_id")))
           .otherwise(lit(null).cast("string"))))
-      val q2 = s.readStream
-        .schema("doc_id BIGINT, op STRING, new_text STRING, " +
-          "new_lang STRING")
-        .option("maxFilesPerTrigger", "1").parquet(s"$wh/in2")
+      val q2 = FileWaves.read(s, StructType.fromDDL(
+          "doc_id BIGINT, op STRING, new_text STRING, new_lang STRING"),
+          s"$wh/in2")
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Pipeline.mergeApplyTableEvolved(s, tableDir, batch,

@@ -141,8 +141,6 @@ object H264Intra {
   final class BitReader(bytes: Array[Byte]) {
     private var pos = 0 // bit position
 
-    def bitsLeft: Int = bytes.length * 8 - pos
-
     def readBit(): Int = {
       require(pos < bytes.length * 8, "read past RBSP end")
       val b = (bytes(pos >> 3) >> (7 - (pos & 7))) & 1

@@ -103,13 +103,6 @@ object KplAggregation {
     out.toByteArray
   }
 
-  /** Serialized size the pack would have — for the producer's 1 MB
-    * Kinesis record budget without building the pack twice. Slight
-    * over-estimate is fine; this uses the exact encoder. */
-  def estimateSize(records: Seq[UserRecord]): Int =
-    if (records.isEmpty) Magic.length + 16
-    else aggregate(records).length
-
   def isAggregated(data: Array[Byte]): Boolean =
     data.length >= Magic.length + 16 &&
       data(0) == Magic(0) && data(1) == Magic(1) &&

@@ -31,8 +31,8 @@ object StreamingTaxi {
 
   val DefaultWatermarkDelay = "10 seconds"
 
-  /** Streaming session set-up shared by the app, StreamBench and the
-    * specs, applied before any query starts: the RocksDB state store
+  /** Streaming session set-up shared by the app and the specs,
+    * applied before any query starts: the RocksDB state store
     * (C1, the Spark analogue of the reference's RocksDB backend,
     * ProcessTaxiStream.java:139-148) with changelog checkpoints, and
     * one class loader for every query's generated code. */

@@ -28,15 +28,6 @@ import org.apache.spark.sql.SparkSession
   */
 object BatchScale {
 
-  /** Target input bytes per shuffle partition inside iteration
-    * loops — the §2.2 "100 MB–1 GB per partition" rule, at the low
-    * end because every round re-shuffles the working frame. */
-  val BytesPerPartition: Long = 64L * 1024 * 1024
-
-  /** Floor: two partitions so a single straggler never serializes a
-    * round and the plan shape (exchange present) matches production. */
-  val MinPartitions = 2
-
   /** Conf key carrying the harness-derived loop partition count from
     * [[withInputScope]] to [[withLoopPartitions]]; doubles as the
     * ops override. Unset = loops run at the session setting (the
@@ -44,29 +35,15 @@ object BatchScale {
     * and are unchanged). */
   val ConfKey = "spark.graft.batch.iterPartitions"
 
-  private def pathBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(path))
-  }
+  /** Env override of the derived count, for A/B runs
+    * (tools/ab_iter.sh); unset by default. */
+  private val EnvKey = "SPARK_GRAFT_BATCH_PARTITIONS"
 
   /** Loop partition count for a kernel over the given input
-    * files/dirs: dev A/B env override first (mirrors
-    * SPARK_GRAFT_STREAM_PARTITIONS; unset in the driver's run), else
-    * ceil(total bytes / 64 MB) clamped to [MinPartitions, current
-    * session shuffle partitions]. */
-  def inputPartitions(spark: SparkSession, paths: Seq[String]): Int = {
-    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    sys.env.get("SPARK_GRAFT_BATCH_PARTITIONS") match {
-      case Some(v) => math.max(v.trim.toInt, 1)
-      case None =>
-        val bytes = paths.map(pathBytes).sum
-        val want = ((bytes + BytesPerPartition - 1) /
-          BytesPerPartition).toInt
-        math.min(math.max(want, MinPartitions), math.max(cur, 1))
-    }
-  }
+    * files/dirs: the [[EnvKey]] override if set, else the
+    * [[InputPartitions]] rule over their bytes. */
+  def inputPartitions(spark: SparkSession, paths: Seq[String]): Int =
+    InputPartitions.count(spark, paths, EnvKey, sys.env.get(EnvKey))
 
   /** Harness-side: declare the input bytes for every loop the query
     * runs — sets [[ConfKey]] for the duration of `f` (restored
@@ -110,12 +87,7 @@ object BatchScale {
     spark.conf.getOption(ConfKey) match {
       case None => f
       case Some(v) =>
-        val n =
-          try math.max(v.trim.toInt, 1)
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$ConfKey must be a positive integer, got '$v'")
-          }
+        val n = InputPartitions.parse(ConfKey, v)
         val keepAqe = spark.conf.getOption(AdaptiveKey)
           .exists(_.trim.equalsIgnoreCase("true"))
         val prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -21,8 +21,9 @@ import org.apache.spark.sql.SparkSession
   * ~90 % state-commit bookkeeping, ~10 % join work.
   *
   * The honest production sizing follows STATE SIZE, not core count:
-  * one partition per [[BytesPerPartition]] of buffered input, exactly
-  * like sizing shuffle partitions to 100 MB–1 GB blocks (§2.2). At
+  * one partition per 64 MB of buffered input ([[InputPartitions]]),
+  * exactly like sizing shuffle partitions to 100 MB–1 GB blocks
+  * (§2.2). At
   * 100 TB/day ingest the same formula lands in the thousands of
   * partitions; on a 20 MB bench wave set it lands at the floor. Both
   * are right for their scale, so the knob is derived per query from
@@ -32,52 +33,15 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamScale {
 
-  /** Target bytes of streamed input per state partition — the §2.2
-    * "100 MB–1 GB per shuffle partition" rule applied to keyed state
-    * (lower because state rows outlive one batch). */
-  val BytesPerPartition: Long = 64L * 1024 * 1024
-
-  /** Floor: keep at least this many partitions so a single slow
-    * store never serializes a batch and recovery has parallelism. */
-  val MinPartitions = 2
-
-  private def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(path))
-  }
+  /** Conf key overriding the derived count (set by ops). */
+  val ConfKey = "spark.graft.stream.statePartitions"
 
   /** State-partition count for a streaming query fed from `inputDir`:
-    * explicit conf override if set, else ceil(bytes/64 MB) clamped to
-    * [MinPartitions, current session shuffle partitions]. */
-  /** Parse an override value: must be a positive int (clamped to
-    * >= 1); anything unparseable fails loudly with the source named
-    * rather than surfacing later as an invalid shuffle-partitions
-    * setting at stream start. */
-  private def parseOverride(src: String, v: String): Int =
-    try math.max(v.trim.toInt, 1)
-    catch { case _: NumberFormatException =>
-      throw new IllegalArgumentException(
-        s"$src must be a positive integer, got '$v'")
-    }
-
-  def statePartitions(spark: SparkSession, inputDir: String): Int = {
-    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // env override is dev-only A/B (mirrors SPARK_GRAFT_EXTENSIONS=off;
-    // unset in the driver's run); the conf override is the ops knob.
-    // Expression-shaped (no return-inside-lambda, which compiles to a
-    // fragile NonLocalReturnControl throw).
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-      .map(parseOverride("SPARK_GRAFT_STREAM_PARTITIONS", _))
-      .orElse(spark.conf.getOption("spark.graft.stream.statePartitions")
-        .map(parseOverride("spark.graft.stream.statePartitions", _)))
-      .getOrElse {
-        val want = math.ceil(
-          dirBytes(inputDir).toDouble / BytesPerPartition).toInt
-        math.min(math.max(want, MinPartitions), math.max(cur, 1))
-      }
-  }
+    * the [[ConfKey]] override if set, else the [[InputPartitions]]
+    * rule over the directory's bytes. */
+  def statePartitions(spark: SparkSession, inputDir: String): Int =
+    InputPartitions.count(spark, Seq(inputDir), ConfKey,
+      spark.conf.getOption(ConfKey))
 
   /** Run `f` (which must START the streaming queries — a stream
     * CLONES the session conf at start and keeps it) with
