@@ -4,7 +4,7 @@ import graft.io.{BulkIndexSink, BulkTransport, CountingTransport, HttpBulkTransp
 import graft.replay.StreamPopulator
 import graft.streaming.{ProgressTelemetry, StreamingTaxi}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The end-to-end application: the Spark-first counterpart of the
   * reference's `ProcessTaxiStream.main` (ProcessTaxiStream.java:64-167)
@@ -18,9 +18,12 @@ import org.apache.spark.sql.streaming.Trigger
   * '''Cheap commits and starts''': [[run]] applies
   * [[StreamingTaxi.configureStreamingSession]] before any query
   * starts. Each micro-batch's state commit appends a RocksDB changelog
-  * instead of copying a full checkpoint, and every query compiles into
-  * one class loader, so a query started again in the same JVM (a
-  * second `run` with `once`) reuses the code the first one compiled.
+  * instead of copying a full checkpoint; its offset, state and commit
+  * files are written without starting a `chmod` or `readlink` process
+  * per file ([[graft.io.LocalCheckpointFileManager]]); and every query
+  * compiles into one class loader, so a query started again in the
+  * same JVM (a second `run` with `once`) reuses the code the first one
+  * compiled.
   *
   * '''Shared-prefix fan-out (SURVEY.md §7.5), decided''': Q1 and Q2
   * run as TWO streaming queries over the one replayed file source.
@@ -125,11 +128,23 @@ object ProcessTaxiStream {
       case other => throw new IllegalArgumentException(
         s"unknown argument: ${other.head}")
     }
-    val cfg = loop(Config("", "", ""), args.toList)
+    check(loop(Config("", "", ""), args.toList))
+  }
+
+  /** The checks on a [[Config]]'s arguments, made by [[parse]] and
+    * again by [[run]] before it has any side effect. */
+  private def check(cfg: Config): Config = {
     require(cfg.inputDir.nonEmpty && cfg.workDir.nonEmpty &&
       cfg.indexDir.nonEmpty, "--input, --work and --index are required")
     require(cfg.kinesisEndpoint.isEmpty || !cfg.wireSource,
       "--kinesis and --wire-source are mutually exclusive source choices")
+    // --sigv4 only means something with an HTTP index (or as the
+    // region for --kinesis signing): fail loudly rather than silently
+    // not signing
+    require(cfg.sigv4Region.isEmpty || cfg.httpIndex.isDefined ||
+      cfg.kinesisEndpoint.isDefined, "--sigv4 requires --http-index or --kinesis")
+    require(!cfg.createIndex || cfg.httpIndex.isDefined,
+      "--create-index requires --http-index")
     cfg
   }
 
@@ -155,8 +170,22 @@ object ProcessTaxiStream {
     * processed). Restart-safe: replay re-writes the same partition
     * file names (the file source's checkpoint skips already-processed
     * names) and the sinks' deterministic doc ids absorb re-delivered
-    * batches. */
+    * batches. A run that fails leaves no query, replay thread or
+    * listener behind in the session. */
   def run(spark: SparkSession, cfg: Config): Summary = {
+    check(cfg)
+    // --sigv4: credentials from the standard AWS environment names,
+    // read before the session is touched
+    val signer: Option[graft.io.SigV4Signer] = cfg.sigv4Region.map { region =>
+      val access = sys.env.getOrElse("AWS_ACCESS_KEY_ID",
+        throw new IllegalArgumentException(
+          "--sigv4 requires AWS_ACCESS_KEY_ID / AWS_SECRET_ACCESS_KEY"))
+      val secret = sys.env.getOrElse("AWS_SECRET_ACCESS_KEY",
+        throw new IllegalArgumentException(
+          "--sigv4 requires AWS_ACCESS_KEY_ID / AWS_SECRET_ACCESS_KEY"))
+      graft.io.SigV4Signer(access, secret, region, "es",
+        sys.env.get("AWS_SESSION_TOKEN"))
+    }
     StreamingTaxi.configureStreamingSession(spark)
     val telemetry = new ProgressTelemetry
     spark.streams.addListener(telemetry)
@@ -170,7 +199,6 @@ object ProcessTaxiStream {
     // files at query start, so racing the producer would silently
     // truncate the run.
     val replayDir = s"${cfg.workDir}/replay"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(replayDir))
     val replayed = new java.util.concurrent.atomic.AtomicReference((0L, 0L))
     val replayError = new java.util.concurrent.atomic.AtomicReference[Throwable]
     // kinesis requests sign with the standard AWS env credentials
@@ -201,18 +229,15 @@ object ProcessTaxiStream {
           partitions = cfg.replayPartitions, speedup = cfg.speedup,
           statsEveryMs = 60000L).populate())
     }
-    val replayThread: Option[Thread] =
-      if (cfg.skipReplay) None
-      else if (cfg.once) { doReplay(); None }
-      else {
-        val t = new Thread(() =>
-          try doReplay()
-          catch {
-            case _: InterruptedException => () // shutdown-interrupt: clean
-            case e: Throwable => replayError.set(e) // surfaced below
-          }, "graft-replay")
-        t.setDaemon(true); t.start(); Some(t)
-      }
+    def startReplayThread(): Thread = {
+      val t = new Thread(() =>
+        try doReplay()
+        catch {
+          case _: InterruptedException => () // shutdown-interrupt: clean
+          case e: Throwable => replayError.set(e) // surfaced below
+        }, "graft-replay")
+      t.setDaemon(true); t.start(); t
+    }
 
     // ---- processor half: one source definition, two queries -------
     def source: DataFrame = {
@@ -253,34 +278,6 @@ object ProcessTaxiStream {
     // stays idempotent regardless)
     val pickupAcc = spark.sparkContext.longAccumulator("pickup_count_docs")
     val durationAcc = spark.sparkContext.longAccumulator("trip_duration_docs")
-    // --sigv4: credentials from the standard AWS environment names.
-    // It only means something with an HTTP index (or as the region
-    // for --kinesis signing): fail loudly rather than silently not
-    // signing (or demanding credentials the local-dir sink never uses).
-    if (cfg.sigv4Region.isDefined && cfg.httpIndex.isEmpty &&
-        cfg.kinesisEndpoint.isEmpty)
-      throw new IllegalArgumentException(
-        "--sigv4 requires --http-index or --kinesis")
-    val signer: Option[graft.io.SigV4Signer] = cfg.sigv4Region.map { region =>
-      val access = sys.env.getOrElse("AWS_ACCESS_KEY_ID",
-        throw new IllegalArgumentException(
-          "--sigv4 requires AWS_ACCESS_KEY_ID / AWS_SECRET_ACCESS_KEY"))
-      val secret = sys.env.getOrElse("AWS_SECRET_ACCESS_KEY",
-        throw new IllegalArgumentException(
-          "--sigv4 requires AWS_ACCESS_KEY_ID / AWS_SECRET_ACCESS_KEY"))
-      graft.io.SigV4Signer(access, secret, region, "es",
-        sys.env.get("AWS_SESSION_TOKEN"))
-    }
-    // bootstrap BEFORE the first query starts: a mapping PUT after
-    // documents already auto-created the index would be rejected
-    (cfg.httpIndex, cfg.createIndex) match {
-      case (Some(base), true) =>
-        val created = graft.io.IndexBootstrap.ensureAll(base, signer)
-        println(s"[app] index bootstrap: created=${created.mkString(",")}")
-      case (None, true) => throw new IllegalArgumentException(
-        "--create-index requires --http-index")
-      case _ => ()
-    }
     def transportFor(docType: String,
         acc: org.apache.spark.util.LongAccumulator): BulkTransport =
       cfg.httpIndex match {
@@ -288,21 +285,35 @@ object ProcessTaxiStream {
           new HttpBulkTransport(s"$base/$docType/_bulk", signer = signer), acc)
         case None => new LocalDirTransport(s"${cfg.indexDir}/$docType")
       }
-    val q1 = StreamingTaxi.writer(
-        StreamingTaxi.q1(trips), s"${cfg.workDir}/cp-q1", trigger)
-      .foreachBatch(BulkIndexSink.foreachBatchWriter(
-        Seq("location", "timestamp"),
-        transportFor("pickup_count", pickupAcc)))
-      .queryName("q1_pickup_hotspots")
-      .start()
-    val q2 = StreamingTaxi.writer(
-        StreamingTaxi.q2(trips), s"${cfg.workDir}/cp-q2", trigger)
-      .foreachBatch(BulkIndexSink.foreachBatchWriter(
-        Seq("location", "airport_code", "timestamp"),
-        transportFor("trip_duration", durationAcc)))
-      .queryName("q2_airport_durations")
-      .start()
+    var replayThread: Option[Thread] = None
+    val started = scala.collection.mutable.ListBuffer.empty[StreamingQuery]
     try {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(replayDir))
+      if (!cfg.skipReplay) {
+        if (cfg.once) doReplay() else replayThread = Some(startReplayThread())
+      }
+      // bootstrap BEFORE the first query starts: a mapping PUT after
+      // documents already auto-created the index would be rejected
+      if (cfg.createIndex) cfg.httpIndex.foreach { base =>
+        val created = graft.io.IndexBootstrap.ensureAll(base, signer)
+        println(s"[app] index bootstrap: created=${created.mkString(",")}")
+      }
+      val q1 = StreamingTaxi.writer(
+          StreamingTaxi.q1(trips), s"${cfg.workDir}/cp-q1", trigger)
+        .foreachBatch(BulkIndexSink.foreachBatchWriter(
+          Seq("location", "timestamp"),
+          transportFor("pickup_count", pickupAcc)))
+        .queryName("q1_pickup_hotspots")
+        .start()
+      started += q1
+      val q2 = StreamingTaxi.writer(
+          StreamingTaxi.q2(trips), s"${cfg.workDir}/cp-q2", trigger)
+        .foreachBatch(BulkIndexSink.foreachBatchWriter(
+          Seq("location", "airport_code", "timestamp"),
+          transportFor("trip_duration", durationAcc)))
+        .queryName("q2_airport_durations")
+        .start()
+      started += q2
       // poll rather than block: a dead producer must fail the run
       // instead of leaving queries waiting forever for data
       while ((q1.isActive || q2.isActive) && replayError.get() == null) {
@@ -312,10 +323,10 @@ object ProcessTaxiStream {
       Option(replayError.get()).foreach(e =>
         throw new IllegalStateException("replay producer failed", e))
     } finally {
-      // one side failing must not leave the sibling query, the
-      // producer thread, or the listener running in the session
-      if (q1.isActive) q1.stop()
-      if (q2.isActive) q2.stop()
+      // any failure, from the replay to a query, must not leave a
+      // query, the producer thread, or the listener running in the
+      // session
+      started.foreach(q => if (q.isActive) q.stop())
       replayThread.foreach { t =>
         if (t.isAlive) t.interrupt() // pacing sleep -> clean stop
         t.join(10000)

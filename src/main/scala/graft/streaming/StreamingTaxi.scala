@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.EventCodec
+import graft.io.{EventCodec, LocalCheckpointFileManager}
 import graft.operators.TaxiQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,8 +21,10 @@ import org.apache.spark.sql.Row
   *  - state: windowed streaming aggregation in the RocksDB state store
   *    (C1, [[configureStreamingSession]]), checkpointed per query with
   *    changelog checkpointing: a commit writes only the batch's
-  *    changes. Every query compiles into the session's one class
-  *    loader, so a query start reuses code an earlier start compiled;
+  *    changes, and local checkpoint files are written without a
+  *    `chmod` or `readlink` child process per file. Every query
+  *    compiles into the session's one class loader, so a query start
+  *    reuses code an earlier start compiled;
   *  - C2 event-time toggle: `eventTime = false` reproduces the
   *    reference's `--noeventtime` processing-time mode
   *    (ProcessTaxiStream.java:69-71) by windowing on ingestion time.
@@ -34,8 +36,10 @@ object StreamingTaxi {
   /** Streaming session set-up shared by the app and the specs,
     * applied before any query starts: the RocksDB state store
     * (C1, the Spark analogue of the reference's RocksDB backend,
-    * ProcessTaxiStream.java:139-148) with changelog checkpoints, and
-    * one class loader for every query's generated code. */
+    * ProcessTaxiStream.java:139-148) with changelog checkpoints, one
+    * class loader for every query's generated code, and checkpoint
+    * files on the local file system written without a child process
+    * per file ([[graft.io.LocalCheckpointFileManager]]). */
   def configureStreamingSession(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -52,6 +56,12 @@ object StreamingTaxi {
     // query start recompiles its whole-stage code. graft adds no
     // session artifacts, so nothing depends on the isolation.
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    // every micro-batch writes offset, state and commit files before
+    // its documents count as indexed; Spark's default manager starts a
+    // chmod or readlink process for most of them on a host without
+    // libhadoop. Other schemes keep Spark's default manager.
+    spark.conf.set(LocalCheckpointFileManager.ConfKey,
+      classOf[LocalCheckpointFileManager].getName)
   }
 
   /** Streaming source: newline-JSON files appearing under `dir`,

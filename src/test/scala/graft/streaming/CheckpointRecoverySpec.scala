@@ -34,15 +34,20 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSessionSpec {
 
   private val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+  private val ManagerConf = graft.io.LocalCheckpointFileManager.ConfKey
 
   /** Stop a Q1 query mid-stream (phase 1), resume a NEW query from the
     * same checkpoint (phase 2), and return the number of indexed
     * documents. Both phases run with the shared set-up, except that
     * `changelogBefore = false` turns changelog checkpointing off for
-    * phase 1 (a checkpoint written before it was the default). The
-    * session's changelog setting is restored afterwards. */
-  private def crashAndResume(changelogBefore: Boolean): Long = {
-    val saved = spark.conf.getOption(ChangelogConf)
+    * phase 1 and `localManagerBefore = false` writes phase 1 with
+    * Spark's default checkpoint file manager (checkpoints written
+    * before either was set). The session's settings are restored
+    * afterwards. */
+  private def crashAndResume(changelogBefore: Boolean = true,
+      localManagerBefore: Boolean = true): Long = {
+    val saved = Seq(ChangelogConf, ManagerConf)
+      .map(k => k -> spark.conf.getOption(k))
     try {
       val cp = Files.createTempDirectory("cp-recover").toString
       val indexDir = Files.createTempDirectory("index").toString
@@ -52,6 +57,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSessionSpec {
       // phase 1: first half of the fixture, then stop (simulated crash)
       StreamingTaxi.configureStreamingSession(spark)
       if (!changelogBefore) spark.conf.set(ChangelogConf, "false")
+      if (!localManagerBefore) spark.conf.unset(ManagerConf)
       val ms1 = MemoryStream[String]
       val q1a = StreamingTaxi.q1(StreamingTaxi.tripStream(
         EventCodec.parseEvents(ms1.toDF().toDF("value"))))
@@ -88,9 +94,9 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSessionSpec {
 
       new java.io.File(indexDir).listFiles()
         .count(_.getName.endsWith(".json")).toLong
-    } finally saved match {
-      case Some(v) => spark.conf.set(ChangelogConf, v)
-      case None => spark.conf.unset(ChangelogConf)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -106,13 +112,19 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSessionSpec {
       EventCodec.parseEvents(fixtureLines.toDF("value")))).count()
 
   test("restart from checkpoint recovers window state; idempotent sink dedups") {
-    val indexed = crashAndResume(changelogBefore = true)
+    val indexed = crashAndResume()
     assert(indexed == batchQ1)
     assert(indexed > 0)
   }
 
   test("a checkpoint written without changelogs restarts with them on") {
     val indexed = crashAndResume(changelogBefore = false)
+    assert(indexed == batchQ1)
+    assert(indexed > 0)
+  }
+
+  test("a checkpoint written by Spark's default file manager resumes") {
+    val indexed = crashAndResume(localManagerBefore = false)
     assert(indexed == batchQ1)
     assert(indexed > 0)
   }

@@ -223,6 +223,59 @@ class ProcessTaxiStreamAppSpec extends AnyFunSuite with SparkSessionSpec {
     } finally srv.stop()
   }
 
+  test("a run that fails before its queries start leaves no listener behind") {
+    val wireDir = Files.createTempDirectory("appf-wire").toString
+    val workDir = Files.createTempDirectory("appf-work").toString
+    val indexDir = Files.createTempDirectory("appf-index").toString
+    val base = ProcessTaxiStream.Config(
+      inputDir = wireDir, workDir = workDir, indexDir = indexDir,
+      speedup = 1e12, once = true)
+    val before = spark.streams.listListeners().toSeq
+    // an argument check
+    intercept[IllegalArgumentException](ProcessTaxiStream.run(spark,
+      base.copy(createIndex = true, httpIndex = None)))
+    assert(spark.streams.listListeners().toSeq == before)
+    // the --once replay, over an input directory that does not exist
+    intercept[java.nio.file.NoSuchFileException](ProcessTaxiStream.run(
+      spark, base.copy(inputDir = s"$wireDir/missing")))
+    assert(spark.streams.listListeners().toSeq == before)
+  }
+
+  test("a once run starts no chmod or readlink process on its work directory") {
+    val wireDir = Files.createTempDirectory("appj-wire").toString
+    val workDir = Files.createTempDirectory("appj-work").toFile
+      .getCanonicalPath
+    val indexDir = Files.createTempDirectory("appj-index").toString
+    EventCodec.toJsonLines(SyntheticTrips.fromEvents(spark, "/root/testdata/sf0.001"))
+      .coalesce(1).write.mode("overwrite").text(wireDir)
+    val cfg = ProcessTaxiStream.Config(
+      inputDir = wireDir, workDir = workDir, indexDir = indexDir,
+      speedup = 1e12, replayPartitions = 2,
+      maxFilesPerTrigger = Some(1), once = true)
+
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    val jfr = Files.createTempFile("appj", ".jfr")
+    recording.start()
+    val summary =
+      try ProcessTaxiStream.run(spark, cfg)
+      finally { recording.stop(); recording.dump(jfr); recording.close() }
+    assert(summary.pickupDocs > 0)
+
+    import scala.jdk.CollectionConverters._
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+    Files.delete(jfr)
+    // other suites may run beside this one: count only this run's paths
+    val onWork = commands.filter(_.contains(s"$workDir/"))
+    info(s"${commands.size} process starts, ${onWork.size} on the work directory")
+    val perFile = onWork.filter(c =>
+      c.startsWith("chmod ") || c.startsWith("readlink "))
+    assert(perFile.isEmpty, s"${perFile.size} of ${onWork.size} processes " +
+      s"on the work directory, e.g. ${perFile.take(3).mkString("; ")}")
+  }
+
   test("CLI parser covers the reference's flags") {
     val cfg = ProcessTaxiStream.parse(Array(
       "--input", "/in", "--work", "/w", "--index", "/idx",
@@ -246,6 +299,13 @@ class ProcessTaxiStreamAppSpec extends AnyFunSuite with SparkSessionSpec {
     }
     intercept[IllegalArgumentException] {
       ProcessTaxiStream.parse(Array("--input", "/in"))
+    }
+    val required = Array("--input", "/in", "--work", "/w", "--index", "/idx")
+    intercept[IllegalArgumentException] {
+      ProcessTaxiStream.parse(required :+ "--create-index")
+    }
+    intercept[IllegalArgumentException] {
+      ProcessTaxiStream.parse(required ++ Seq("--sigv4", "eu-west-1"))
     }
   }
 }
