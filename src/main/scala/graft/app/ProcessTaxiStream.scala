@@ -50,7 +50,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   --input <wire jsonl dir> --work <staging/checkpoint root> \
   *   --index <index root> [--http-index <base url>] [--speedup N] \
   *   [--partitions N] [--noeventtime] [--max-files-per-trigger N] [--once]
-  *   [--wire-source] [--create-index] [--sigv4 <region>]
+  *   [--create-index] [--sigv4 <region>]
   *   [--kinesis <endpoint> [--stream <name>] [--aggregate]]
   * }}}
   */
@@ -70,10 +70,6 @@ object ProcessTaxiStream {
       // <base>/<doc_type>/_bulk over HTTP (the reference's ES sink
       // shape) instead of the local-dir index
       httpIndex: Option[String] = None,
-      // --wire-source: read the replay files through the wire-taxi
-      // DataSourceV2 connector (per-file micro-batches, source-side
-      // parsing) instead of readStream.text + from_json
-      wireSource: Boolean = false,
       // --create-index: idempotently PUT the reference's index
       // mappings (geo_point location, date timestamp) onto the
       // --http-index endpoint before streaming (the step the
@@ -118,7 +114,6 @@ object ProcessTaxiStream {
       case "--skip-replay" :: t => loop(cfg.copy(skipReplay = true), t)
       case "--http-index" :: v :: t =>
         loop(cfg.copy(httpIndex = Some(v)), t)
-      case "--wire-source" :: t => loop(cfg.copy(wireSource = true), t)
       case "--create-index" :: t => loop(cfg.copy(createIndex = true), t)
       case "--sigv4" :: v :: t => loop(cfg.copy(sigv4Region = Some(v)), t)
       case "--kinesis" :: v :: t => loop(cfg.copy(kinesisEndpoint = Some(v)), t)
@@ -136,8 +131,6 @@ object ProcessTaxiStream {
   private def check(cfg: Config): Config = {
     require(cfg.inputDir.nonEmpty && cfg.workDir.nonEmpty &&
       cfg.indexDir.nonEmpty, "--input, --work and --index are required")
-    require(cfg.kinesisEndpoint.isEmpty || !cfg.wireSource,
-      "--kinesis and --wire-source are mutually exclusive source choices")
     // --sigv4 only means something with an HTTP index (or as the
     // region for --kinesis signing): fail loudly rather than silently
     // not signing
@@ -256,11 +249,6 @@ object ProcessTaxiStream {
               .option("region", cfg.sigv4Region.getOrElse("us-east-1"))
           }
           graft.io.EventCodec.strictTyped(k.load())
-        case None if cfg.wireSource =>
-          // the connector parses source-side and skips malformed lines
-          // (R1); the codec's strict unknown-type layer still applies
-          graft.io.EventCodec.strictTyped(
-            r.format("wire-taxi").load(replayDir))
         case None =>
           graft.io.EventCodec.parseEvents(
             r.text(s"$replayDir/*.jsonl").toDF("value"))

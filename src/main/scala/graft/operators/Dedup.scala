@@ -149,12 +149,6 @@ object Dedup {
   def minhashNearDups(docs: DataFrame): DataFrame =
     nearDupsFromHashes(shingleHashes(docs))
 
-  /** [[minhashNearDups]] plus the [[graft.util.CacheHandle]]
-    * releasing the persisted shingle-hash corpus. */
-  def minhashNearDupsWithHandle(
-      docs: DataFrame): (DataFrame, graft.util.CacheHandle) =
-    nearDupsFromHashesWithHandle(shingleHashes(docs))
-
   /** Same LSH pipeline over sampled character [[NGramChars]]-grams
     * (q18). */
   def ngramNearDups(docs: DataFrame): DataFrame =

@@ -45,38 +45,6 @@ object Profiling {
     wide.select(explode(array(entries: _*)).as("p")).select(col("p.*"))
   }
 
-  /** HLL-FIRST numeric profile: identical shape to [[numericProfile]]
-    * with `approx_count_distinct` (HyperLogLog++, default 5% rsd) in
-    * place of the exact distinct — ONE aggregation with NO Expand, so
-    * the scan is read once instead of k+1 times.
-    *
-    * This is the 100 TB-first form: ScaleProbe's --heavy curve shows
-    * the exact profile's Expand cost multiplying with the column
-    * count while this stays a single pass. The deployment recipe is
-    * HLL-first for routine profiling, [[numericProfile]] on demand
-    * when a column's exact cardinality is load-bearing (the graded
-    * q61 keeps the exact form — its contract IS exactness). */
-  def numericProfileApprox(df: DataFrame,
-      cols: Seq[String] = ProfileCols): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      Seq(count(col(c)).as(s"cnt_$c"),
-        approx_count_distinct(col(c)).as(s"nd_$c"),
-        min(col(c)).cast("double").as(s"min_$c"),
-        max(col(c)).cast("double").as(s"max_$c"))
-    }
-    val all = count(lit(1)).as("n_rows") +: aggs
-    val wide = df.agg(all.head, all.tail: _*)
-    val entries = cols.map { c =>
-      struct(lit(c).as("col_name"),
-        col("n_rows"),
-        (col("n_rows") - col(s"cnt_$c")).as("n_nulls"),
-        col(s"nd_$c").as("n_distinct_approx"),
-        col(s"min_$c").as("min_value"),
-        col(s"max_$c").as("max_value"))
-    }
-    wide.select(explode(array(entries: _*)).as("p")).select(col("p.*"))
-  }
-
   /** Driver-checkable form of the HLL-first profile (q79, the q40
     * bounds pattern): exact n_rows/n_nulls/min/max plus the exact
     * distinct count and a boolean asserting the HLL estimate landed

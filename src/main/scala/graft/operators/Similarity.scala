@@ -166,7 +166,8 @@ object Similarity {
   /** Exact cosine top-k of every query vector against the corpus.
     * Per-query cost is one corpus scan: O(|Q|·|corpus|) dot products
     * plus the rank over |Q|·|corpus| scored rows — the crossover
-    * against [[lshTopK]] is measured in graft.ScaleProbe. */
+    * against [[lshTopK]] is recorded in BASELINE.md, "ANN brute-force
+    * vs LSH crossover (r5, 20k vectors)". */
   def bruteForceTopK(emb: DataFrame,
       numQueries: Int = NumQueryVectors): DataFrame =
     topK(broadcast(queries(emb, numQueries)).crossJoin(emb)
@@ -797,18 +798,10 @@ object Similarity {
 
   /** [[graphSearchTopK]] over a PREBUILT edge frame (src, nbr) — the
     * serving call: the graph is built once per ingest (q112,
-    * maintained by q123) and every query batch pays only the walk. */
-  def graphSearchOverEdges(emb: DataFrame, edges: DataFrame,
-      numQueries: Int = NumQueryVectors,
-      hops: Int = GraphSearchHops,
-      beamWidth: Int = GraphSearchBeam): DataFrame =
-    graphSearchOverEdgesWithHandle(emb, edges, numQueries, hops,
-      beamWidth)._1
-
-  /** [[graphSearchOverEdges]] plus the [[graft.util.CacheHandle]]
-    * releasing the final hop's scored cache (earlier hops release
-    * their predecessor inline; the last one must outlive the lazy
-    * result). */
+    * maintained by q123) and every query batch pays only the walk.
+    * The [[graft.util.CacheHandle]] releases the final hop's scored
+    * cache (earlier hops release their predecessor inline; the last
+    * one must outlive the lazy result). */
   def graphSearchOverEdgesWithHandle(emb: DataFrame, edges: DataFrame,
       numQueries: Int = NumQueryVectors,
       hops: Int = GraphSearchHops,
@@ -962,9 +955,10 @@ object Similarity {
     * every query batch pays only the two walks: [[LayerHopsUpper]]
     * hops on the stride-sparse upper graph, the descend seed, and
     * [[LayerHopsBase]] hops on the base graph. This is what the
-    * scale ladder times (ScaleProbe `layered_search`): the walk must
-    * stay ~flat in corpus size while the flat q124 walk's hop budget
-    * would have to grow with graph diameter. */
+    * scale ladder timed (BASELINE.md, "Layered (HNSW-style) serving
+    * rung (r11)"): the walk must stay ~flat in corpus size while the
+    * flat q124 walk's hop budget would have to grow with graph
+    * diameter. */
   def layeredSearchOverEdges(emb: DataFrame, upperEmb: DataFrame,
       uedges: DataFrame, bedges: DataFrame,
       numQueries: Int = NumQueryVectors,
@@ -1685,7 +1679,7 @@ object Similarity {
     * tracks flat-IVF recall × stage-1 agreement (~0.98 measured by
     * the q170 spec) — pinned on the clustered fixture in
     * SimilaritySpec, measured against brute at the scaled rung
-    * (ScaleProbe `search_coarse`). */
+    * (BASELINE.md, "Coarse-fine END-TO-END retrieval rung (r11)"). */
   def ivfTopKCoarseWithHandle(emb0: DataFrame, iters: Int = KMeansIters,
       numQueries: Int = NumQueryVectors,
       numCentroids: Int = NumCentroids,
@@ -2020,10 +2014,11 @@ object Similarity {
   }
 
   /** LSH candidate (query_id, vec_id) pairs: corpus vectors sharing
-    * at least one band bucket with the query. Exposed so the spec and
-    * graft.ScaleProbe can measure candidates-per-query directly —
-    * the number that must stay ≪ |corpus| for the scale path to be
-    * worth its name. Aliased self-sides (see [[embeddingNearDups]]).
+    * at least one band bucket with the query. Exposed so the spec can
+    * measure candidates-per-query directly — the number that must
+    * stay ≪ |corpus| for the scale path to be worth its name (20k-
+    * vector figures in BASELINE.md, "ANN brute-force vs LSH
+    * crossover"). Aliased self-sides (see [[embeddingNearDups]]).
     *
     * `multiProbe = n` additionally probes, per query band, every key
     * within Hamming distance ≤ n of the query's key (n = 1 ⇒
@@ -2070,7 +2065,8 @@ object Similarity {
     * corpus vector (amortized over ALL queries) + one band-key
     * shuffle + |Q|·(2.3% of corpus) exact cosines — vs brute force's
     * |Q| dots per corpus vector and |Q|·|corpus|-row rank. Crossover
-    * is at |Q| ≈ NumPlanes queries; measured in graft.ScaleProbe. */
+    * is at |Q| ≈ NumPlanes queries; recorded in BASELINE.md, "ANN
+    * brute-force vs LSH crossover (r5, 20k vectors)". */
   def lshTopK(emb0: DataFrame,
       numQueries: Int = NumQueryVectors,
       multiProbe: Int = 0): DataFrame =

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * (key, salt) and the hot key's rows spread over `salts` reducers
   * instead of one.
   *
-  * === Decision rule (measured, ScaleProbe --skew; BASELINE.md r7) ===
+  * === Decision rule (measured, BASELINE.md r7) ===
   *
-  * Head-to-head on the q25 join shape with a fabricated hot key
-  * (broadcast disabled), AQE's skew-join beat [[saltedJoin]] at every
-  * probed regime — 20×/20% skew: 1.2 s vs 1.9 s; 50×/50%: 1.1 s vs
+  * Head-to-head (BASELINE.md, "AQE skew-join vs explicit salting")
+  * on the q25 join shape with a fabricated hot key (broadcast
+  * disabled), AQE's skew-join beat [[saltedJoin]] at every probed
+  * regime — 20×/20% skew: 1.2 s vs 1.9 s; 50×/50%: 1.1 s vs
   * 2.6 s; 100×/90%: 1.3 s vs 3.3 s (static join: 2.9 / 4.5 / 8.6 s).
   * Structurally: AQE splits ONLY the oversized partitions and joins
   * each split against just the matching dim rows, while salting

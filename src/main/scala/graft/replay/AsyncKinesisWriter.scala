@@ -7,8 +7,7 @@ import graft.io.{KinesisHttpClient, PutRecordEntry}
 /** R8 at the PROTOCOL level: the KPL-shaped asynchronous Kinesis
   * producer (StreamPopulator.java:62-66, :166-167), publishing
   * through [[graft.io.KinesisHttpClient.putRecords]] instead of the
-  * SDK. Contract mirrors the KPL and the file twin
-  * ([[AsyncPartitionFileWriter]]):
+  * SDK. Contract mirrors the KPL:
   *
   *  - `addRecord` enqueues and returns a future that completes when
   *    the service acks the record (its PutRecords entry came back
@@ -47,7 +46,7 @@ import graft.io.{KinesisHttpClient, PutRecordEntry}
   * already throttles broadcasts to every 5 s / 100k events).
   *
   * Backpressure stays external by design: the caller pairs this with
-  * [[BackpressureSemaphore]] exactly as it does the file writer (R7).
+  * a [[BackpressureSemaphore]] (R7), as [[StreamPopulator]] does.
   */
 class AsyncKinesisWriter(
     client: KinesisHttpClient,

@@ -1,8 +1,6 @@
 package graft.replay
 
-import java.io.BufferedWriter
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CompletableFuture, ExecutorService, Executors, Semaphore, TimeUnit}
+import java.util.concurrent.Semaphore
 
 /** R7: fair semaphore bounding the number of outstanding asynchronous
   * records (BackpressureSemaphore.java:24-51 — same contract: acquire
@@ -36,10 +34,10 @@ class BackpressureSemaphore(val maxOutstanding: Int) {
   * trip_id-ordered stream); completions may ack in any order. An
   * emitted watermark is a promise — a producer that later submits an
   * older event has made that event late, exactly as with Flink/Spark
-  * watermarks. Under the synchronous file writes of
-  * [[StreamPopulator]]'s default mode the tracker degenerates to the
-  * last written timestamp; the async mode exercises the genuine
-  * ordering. */
+  * watermarks. [[StreamPopulator]]'s synchronous file writes need no
+  * tracker (every written record is durable, so the low watermark is
+  * the last written timestamp); its Kinesis path exercises the
+  * genuine ordering. */
 class WatermarkTracker {
   private val inFlight = scala.collection.mutable.TreeMap.empty[Long, Int]
   private var maxCompleted = Long.MinValue
@@ -65,109 +63,4 @@ class WatermarkTracker {
   /** Long.MinValue until the first completion. */
   def watermark: Long = synchronized(wm)
   def inFlightCount: Int = synchronized(inFlight.valuesIterator.sum)
-}
-
-/** R8: asynchronous partitioned record writer — the offline stand-in
-  * for the KPL Kinesis producer (StreamPopulator.java:62-66):
-  * `addRecord` enqueues onto the target partition's single writer
-  * thread and returns a future that completes when the record is
-  * durably appended; records that wait in the queue longer than
-  * `ttlMs` FAIL their future instead of being written (the KPL
-  * record-TTL semantics, default 300 s). One thread per partition
-  * preserves per-partition submission order (Kinesis per-shard
-  * ordering). */
-class AsyncPartitionFileWriter(
-    dir: String,
-    partitions: Int,
-    ttlMs: Long = 300000L,
-    now: () => Long = () => System.currentTimeMillis(),
-    execFactory: () => ExecutorService = () => Executors.newSingleThreadExecutor())
-    extends AutoCloseable {
-
-  Files.createDirectories(Paths.get(dir))
-
-  /** Per-partition segment state — only ever touched from that
-    * partition's single writer thread. Segments are written under a
-    * dot-prefixed `.tmp` name and PUBLISHED by atomic rename when the
-    * segment closes ([[rotate]]/[[close]]), so a tailing consumer
-    * globbing `*.jsonl` only ever lists complete, immutable files —
-    * Spark's file streaming source reads each path exactly once, so
-    * appending to a visible file silently loses data. */
-  private final class Seg(p: Int) {
-    var segment = 0
-    var writer: BufferedWriter = _
-    var tmp: java.nio.file.Path = _
-    def ensureOpen(): Unit = if (writer == null) {
-      tmp = Paths.get(dir, f".part-$p%05d-$segment%05d.jsonl.tmp")
-      writer = Files.newBufferedWriter(tmp)
-    }
-    def publish(): Unit = if (writer != null) {
-      writer.close()
-      Files.move(tmp, Paths.get(dir, f"part-$p%05d-$segment%05d.jsonl"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      writer = null
-      segment += 1
-    }
-  }
-  private val segs = IndexedSeq.tabulate(partitions)(new Seg(_))
-  private val execs = IndexedSeq.fill(partitions)(execFactory())
-
-  /** Enqueue one line; the future completes with the write wall time
-    * or fails (TTL expiry / IO error). */
-  def addRecord(partition: Int, line: String): CompletableFuture[java.lang.Long] = {
-    val enqueuedAt = now()
-    val f = new CompletableFuture[java.lang.Long]()
-    execs(partition).execute { () =>
-      if (now() - enqueuedAt > ttlMs)
-        f.completeExceptionally(new java.util.concurrent.TimeoutException(
-          s"record exceeded ttl ${ttlMs} ms in partition $partition queue"))
-      else try {
-        val s = segs(partition)
-        s.ensureOpen()
-        s.writer.write(line)
-        s.writer.newLine()
-        f.complete(now())
-      } catch { case e: Throwable => f.completeExceptionally(e) }
-    }
-    f
-  }
-
-  /** Close and publish every partition's current segment; subsequent
-    * records open the next segment. Ordered after all queued records
-    * (runs on each partition's writer thread). */
-  def rotate(): Seq[CompletableFuture[java.lang.Long]] =
-    (0 until partitions).map { p =>
-      val f = new CompletableFuture[java.lang.Long]()
-      execs(p).execute { () =>
-        try { segs(p).publish(); f.complete(now()) }
-        catch { case e: Throwable => f.completeExceptionally(e) }
-      }
-      f
-    }
-
-  /** Append a control line to EVERY partition, ordered after all
-    * previously submitted records of each partition (the watermark
-    * broadcast path, R6). Returns the per-partition futures — the
-    * caller must observe them (a dropped failure would leave one
-    * partition silently missing the control line). */
-  def broadcast(line: String): Seq[CompletableFuture[java.lang.Long]] =
-    (0 until partitions).map(p => addRecord(p, line))
-
-  /** Block until every queued record is written. */
-  def flushSync(): Unit = {
-    val barriers = execs.map { e =>
-      val f = new CompletableFuture[Unit]()
-      e.execute(() => f.complete(()))
-      f
-    }
-    barriers.foreach(_.get(60, TimeUnit.SECONDS))
-  }
-
-  /** Publish all open segments and shut the writer threads down. */
-  override def close(): Unit = {
-    rotate().foreach(_.get(60, TimeUnit.SECONDS))
-    execs.foreach(_.shutdown())
-    execs.foreach(_.awaitTermination(60, TimeUnit.SECONDS))
-  }
 }

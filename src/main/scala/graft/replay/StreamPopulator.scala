@@ -18,15 +18,12 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   *  - [[StreamPopulator]]: speed-up pacing (R3,
   *    StreamPopulator.java:143-161, MIN_SLEEP :44), watermark
   *    broadcast to every output partition (R5/R6,
-  *    WatermarkTracker.java:57-91 — with synchronous file writes the
-  *    low watermark of un-acked events degenerates to the timestamp
-  *    of the last written event), progress statistics (R9,
-  *    StreamPopulator.java:200-210).
-  *
-  * R7 (KPL backpressure semaphore) and R8 (Kinesis writer) are
-  * Kinesis-specific and intentionally absent: file-partition output
-  * is synchronous, and the streaming engine reads the partition files
-  * as its source (StreamingTaxi.fromJsonFiles).
+  *    WatermarkTracker.java:57-91), progress statistics (R9,
+  *    StreamPopulator.java:200-210), over one of two write paths:
+  *    synchronous partition files, which the streaming engine reads
+  *    as its source (StreamingTaxi.fromJsonFiles), or the Kinesis
+  *    protocol through [[AsyncKinesisWriter]] (R8) behind a
+  *    [[BackpressureSemaphore]] (R7).
   */
 object ReplayJson {
   val mapper = new ObjectMapper()
@@ -145,18 +142,21 @@ object AdaptTime {
   * `partitions` output files at `speedup`× real time, broadcasting a
   * watermark line to every partition each `watermarkEveryMs` of wall
   * time or `watermarkEveryEvents` events (StreamPopulator.java:39-41),
-  * logging progress every `statsEveryMs`.
+  * logging progress every `statsEveryMs`. With synchronous file
+  * writes every prior record is durable, so the low watermark of
+  * un-acked events is the timestamp of the last written event.
   *
-  * `maxOutstanding > 0` switches to the ASYNCHRONOUS write path —
-  * the full R7/R8 shape of the reference's KPL producer: records go
-  * through [[AsyncPartitionFileWriter]] (per-partition writer thread,
-  * record TTL), a fair [[BackpressureSemaphore]] bounds outstanding
-  * records (reference default 50,000), and the broadcast watermark is
-  * the genuine [[WatermarkTracker]] low watermark of un-acked events
-  * rather than the last-written timestamp the synchronous path
-  * degenerates to. Failed/expired records are counted in
-  * [[failedWrites]] and skipped (the reference skips throttling
-  * exceptions, StreamPopulator.java:189-198). */
+  * `kinesisSink` switches to the reference's actual architecture
+  * (StreamPopulator.java:62-66): records publish over the Kinesis
+  * protocol, routed by partition key = hash(payload) (R8); a fair
+  * [[BackpressureSemaphore]] of `maxOutstanding` permits bounds the
+  * records in flight (R7, reference default 50,000); watermarks
+  * broadcast to EVERY shard via ExplicitHashKey (R6) and carry the
+  * genuine [[WatermarkTracker]] low watermark of un-acked events
+  * (R5). Failed records are counted in [[failedWrites]] and skipped
+  * (the reference skips throttling exceptions,
+  * StreamPopulator.java:189-198). The caller owns the writer's
+  * lifecycle; populate() drains it before the final watermark. */
 class StreamPopulator(
     inputDir: String,
     outputDir: String,
@@ -168,17 +168,8 @@ class StreamPopulator(
     statsEveryMs: Long = 60000L,
     sleep: Long => Unit = Thread.sleep,
     now: () => Long = () => System.currentTimeMillis(),
-    maxOutstanding: Int = 0, // 0 = synchronous writes; reference KPL: 50000
-    recordTtlMs: Long = 300000L, // KPL record TTL, StreamPopulator.java:65
+    maxOutstanding: Int = 50000, // Kinesis records in flight (R7)
     rotateEveryEvents: Long = 100000L, // segment size (see SegmentWriters)
-    // Third write path: publish over the KINESIS PROTOCOL instead of
-    // files — the reference's actual architecture
-    // (StreamPopulator.java:62-66). Records route by partition key =
-    // hash(payload) (R8), watermarks broadcast to EVERY shard via
-    // ExplicitHashKey (R6), backpressure and the un-acked low
-    // watermark reuse the async plumbing (R7/R5). The caller owns the
-    // writer's lifecycle; populate() drains it before the final
-    // watermark. maxOutstanding <= 0 takes the reference's 50,000.
     kinesisSink: Option[AsyncKinesisWriter] = None) {
 
   val MinSleepMs = 5L // StreamPopulator.java:44
@@ -186,13 +177,13 @@ class StreamPopulator(
   private val failed = new java.util.concurrent.atomic.AtomicLong(0)
   private val failedControl = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** DATA records whose async write failed or out-aged the TTL (0 in
-    * synchronous mode). Watermark control lines are tracked
-    * separately in [[failedControlLines]] — a wedged partition must
-    * not make lost control lines read as lost data. */
+  /** DATA records whose Kinesis publish failed (0 with file
+    * output). Watermark control lines are tracked separately in
+    * [[failedControlLines]] — a wedged shard must not make lost
+    * control lines read as lost data. */
   def failedWrites: Long = failed.get()
 
-  /** Watermark control lines whose async broadcast failed. */
+  /** Watermark control lines whose Kinesis broadcast failed. */
   def failedControlLines: Long = failedControl.get()
 
   /** Synchronous segmented writers: each partition writes segment
@@ -231,25 +222,17 @@ class StreamPopulator(
     def close(): Unit = publish()
   }
 
-  // exactly one of the three write paths is materialized per populator
+  // exactly one of the two write paths is materialized per populator
   private lazy val syncWriters: SegmentWriters = new SegmentWriters
-  private lazy val asyncBundle
-      : (AsyncPartitionFileWriter, BackpressureSemaphore, WatermarkTracker) =
-    (new AsyncPartitionFileWriter(outputDir, partitions, recordTtlMs, now),
-      new BackpressureSemaphore(maxOutstanding),
-      new WatermarkTracker)
   private lazy val kinesisBundle: (BackpressureSemaphore, WatermarkTracker) =
-    (new BackpressureSemaphore(
-      if (maxOutstanding > 0) maxOutstanding else 50000),
-      new WatermarkTracker)
+    (new BackpressureSemaphore(maxOutstanding), new WatermarkTracker)
   private def kinesis = kinesisSink.isDefined
-  private def async = !kinesis && maxOutstanding > 0
 
   private def writeRecord(p: Int, line: String, eventTs: Long): Unit =
     if (kinesis) {
       val (sem, tracker) = kinesisBundle
       tracker.track(eventTs)
-      sem.acquire() // R7, unchanged
+      sem.acquire() // R7: block the producer at maxOutstanding
       // R8: partition key = hash of the payload, the reference's choice
       kinesisSink.get.addRecord(line.hashCode.toString,
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -258,26 +241,15 @@ class StreamPopulator(
           tracker.complete(eventTs)
           if (err != null) failed.incrementAndGet()
         }: Unit
-    } else if (!async) syncWriters.write(p, line)
-    else {
-      val (w, sem, tracker) = asyncBundle
-      tracker.track(eventTs)
-      sem.acquire() // R7: block the producer at maxOutstanding
-      w.addRecord(p, line).whenComplete { (_, err) =>
-        sem.release()
-        tracker.complete(eventTs) // success OR failure un-tracks (R5)
-        if (err != null) failed.incrementAndGet()
-      }
-    }
+    } else syncWriters.write(p, line)
 
   /** The raw event-time base for the next watermark line: the current
     * record's timestamp under synchronous writes (every prior record
-    * is durable), the tracker's un-acked low watermark under async or
-    * kinesis publishing (None until a first completion). */
+    * is durable), the tracker's un-acked low watermark under kinesis
+    * publishing (None until a first completion). */
   private def watermarkBase(currentTs: Long): Option[Long] =
     if (kinesis) Some(kinesisBundle._2.watermark).filter(_ != Long.MinValue)
-    else if (!async) Some(currentTs)
-    else Some(asyncBundle._3.watermark).filter(_ != Long.MinValue)
+    else Some(currentTs)
 
   private def emitWatermark(ts: Long): Unit = {
     val line = s"""{"type": "watermark", "watermark": "${ReplayJson.toIso(ts)}"}"""
@@ -288,19 +260,11 @@ class StreamPopulator(
       try kinesisSink.get.broadcastToAllShards("watermark",
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
       catch { case _: java.io.IOException => failedControl.incrementAndGet() }
-    else if (!async) syncWriters.writeAll(line)
-    else asyncBundle._1.broadcast(line) // ordered after queued records
-      .foreach(_.whenComplete { (_, err) =>
-        if (err != null) failedControl.incrementAndGet()
-      })
+    else syncWriters.writeAll(line)
   }
 
   private def rotateSegments(): Unit =
-    if (kinesis) () // shards don't rotate
-    else if (!async) syncWriters.rotate()
-    else asyncBundle._1.rotate().foreach(_.whenComplete { (_, err) =>
-      if (err != null) failedControl.incrementAndGet()
-    })
+    if (!kinesis) syncWriters.rotate() // shards don't rotate
 
   private def adaptWm(rawTs: Long): Long = adaptMode match {
     case AdaptTime.Original => rawTs
@@ -344,7 +308,6 @@ class StreamPopulator(
         lastStats = now()
       }
     }
-    if (async) asyncBundle._1.flushSync() // drain before the final watermark
     if (kinesis) {
       // drain: every submitted record acked (or failed) before the
       // final watermark; the caller keeps ownership of the writer.
@@ -355,9 +318,7 @@ class StreamPopulator(
     }
     if (lastTs >= 0)
       watermarkBase(lastTs).foreach(base => emitWatermark(adaptWm(base)))
-    if (kinesis) () // caller-owned writer stays open
-    else if (!async) syncWriters.close()
-    else asyncBundle._1.close()
+    if (!kinesis) syncWriters.close() // caller-owned writer stays open
     (events, reader.skippedLines)
   }
 }

@@ -416,7 +416,7 @@ object WireTaxiFilters {
     * for this engine's wire data: a space date/time separator and a
     * missing zone designator (treated as UTC — every graft session
     * pins spark.sql.session.timeZone=UTC) both parse instead of
-    * nulling, so --wire-source and the text path agree row for row.
+    * nulling, so the connector and the text path agree row for row.
     * Returns epoch MICROS boxed, or null. */
   def parseTimestampMicros(s: String): Any = {
     def micros(inst: java.time.Instant): Any =

@@ -70,15 +70,6 @@ object StreamingTaxi {
     EventCodec.parseEvents(
       spark.readStream.text(dir).toDF("value"))
 
-  /** The same stream through the wire-taxi DataSourceV2 connector
-    * (graft.sources.WireTaxiSource): per-file micro-batches with
-    * source-side parsing; the codec's strict unknown-type layer still
-    * applies on top (the connector's reader only skips malformed
-    * lines, mirroring R1). */
-  def fromWireSource(spark: SparkSession, dir: String): DataFrame =
-    EventCodec.strictTyped(
-      spark.readStream.format("wire-taxi").load(dir))
-
   /** The trip data path with event-time watermarking applied.
     * `eventTime = false` swaps in processing time (C2). */
   def tripStream(events: DataFrame,

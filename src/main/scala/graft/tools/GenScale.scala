@@ -36,11 +36,17 @@ import org.apache.spark.sql.functions._
   *     replicas are not bit-equal points.
   *
   * Everything is computed with builtin column functions (no UDFs) —
-  * the generator itself is a Spark job that scales. */
+  * the generator itself is a Spark job that scales.
+  *
+  * A scale rung is this tool plus the graded mains: GenScale writes
+  * the ×N directory, `graft.Bench` times queries over it
+  * (`SPARK_GRAFT_SF_DIR=<outDir>`), and `graft.Verify` +
+  * tools/check_oracle.py grade them. Because document replicas are
+  * near-duplicates, dedup and ANN rungs over a GenScale directory
+  * measure duplicate-cluster growth, not a corpus of distinct
+  * documents (BASELINE.md, "Scale rungs on the graded path"). */
 object GenScale {
   def main(args: Array[String]): Unit = {
-    val inDir = args(0)
-    val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = SparkSession.builder()
@@ -50,6 +56,14 @@ object GenScale {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try generate(spark, args(0), args(1), factor)
+    finally spark.stop()
+  }
+
+  /** Write the ×`factor` copy of `inDir` into `outDir` on the given
+    * session (left running for the caller). */
+  def generate(spark: SparkSession, inDir: String, outDir: String,
+      factor: Int): Unit = {
     import spark.implicits._
 
     def in(t: String): DataFrame =
@@ -130,6 +144,5 @@ object GenScale {
               .cast("float") / 100000.0f).cast("float"))))
       .withColumn("vec_id", $"vec_id" + $"k" * sVec)
       .drop("k"))
-    spark.stop()
   }
 }

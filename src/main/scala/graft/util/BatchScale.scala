@@ -30,32 +30,24 @@ object BatchScale {
 
   /** Conf key carrying the harness-derived loop partition count from
     * [[withInputScope]] to [[withLoopPartitions]]; doubles as the
-    * ops override. Unset = loops run at the session setting (the
-    * pre-r18 behavior — tests and ScaleProbe call kernels directly
-    * and are unchanged). */
+    * ops override (a value set before [[withInputScope]] wins, e.g.
+    * `-Dspark.graft.batch.iterPartitions=32` as tools/ab_iter.sh
+    * passes it). Unset = loops run at the session setting (the
+    * pre-r18 behavior — tests call kernels directly and are
+    * unchanged). */
   val ConfKey = "spark.graft.batch.iterPartitions"
 
-  /** Env override of the derived count, for A/B runs
-    * (tools/ab_iter.sh); unset by default. */
-  private val EnvKey = "SPARK_GRAFT_BATCH_PARTITIONS"
-
-  /** Loop partition count for a kernel over the given input
-    * files/dirs: the [[EnvKey]] override if set, else the
-    * [[InputPartitions]] rule over their bytes. */
-  def inputPartitions(spark: SparkSession, paths: Seq[String]): Int =
-    InputPartitions.count(spark, paths, EnvKey, sys.env.get(EnvKey))
-
   /** Harness-side: declare the input bytes for every loop the query
-    * runs — sets [[ConfKey]] for the duration of `f` (restored
-    * after), WITHOUT touching `spark.sql.shuffle.partitions`, so the
-    * query's build stages keep the session's parallelism. Honors a
-    * pre-set ops value: an explicit conf wins over the derivation. */
+    * runs — sets [[ConfKey]] to the [[InputPartitions]] rule over
+    * `paths` for the duration of `f` (restored after), WITHOUT
+    * touching `spark.sql.shuffle.partitions`, so the query's build
+    * stages keep the session's parallelism. Honors a pre-set ops
+    * value: an explicit conf wins over the derivation. */
   def withInputScope[T](spark: SparkSession, paths: Seq[String])
       (f: => T): T = {
     val prev = spark.conf.getOption(ConfKey)
     if (prev.isEmpty)
-      spark.conf.set(ConfKey,
-        inputPartitions(spark, paths).toString)
+      spark.conf.set(ConfKey, InputPartitions.count(spark, paths).toString)
     try f
     finally {
       prev match {

@@ -26,18 +26,15 @@ object InputPartitions {
     walk(new java.io.File(path))
   }
 
-  /** Partition count for input under `paths`: the override value
-    * when set (parsed by [[parse]] under `overrideKey`), else
+  /** Partition count for input under `paths`:
     * ceil(total bytes / [[BytesPerPartition]]) clamped to
     * [[[MinPartitions]], session `spark.sql.shuffle.partitions`]. */
-  def count(spark: SparkSession, paths: Seq[String],
-      overrideKey: String, overrideValue: Option[String]): Int =
-    overrideValue.map(parse(overrideKey, _)).getOrElse {
-      val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val bytes = paths.map(pathBytes).sum
-      val want = ((bytes + BytesPerPartition - 1) / BytesPerPartition).toInt
-      math.min(math.max(want, MinPartitions), math.max(cur, 1))
-    }
+  def count(spark: SparkSession, paths: Seq[String]): Int = {
+    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val bytes = paths.map(pathBytes).sum
+    val want = ((bytes + BytesPerPartition - 1) / BytesPerPartition).toInt
+    math.min(math.max(want, MinPartitions), math.max(cur, 1))
+  }
 
   /** An override value as a partition count (clamped to >= 1).
     * Anything unparseable fails here with its key named, rather than

@@ -40,8 +40,8 @@ object StreamScale {
     * the [[ConfKey]] override if set, else the [[InputPartitions]]
     * rule over the directory's bytes. */
   def statePartitions(spark: SparkSession, inputDir: String): Int =
-    InputPartitions.count(spark, Seq(inputDir), ConfKey,
-      spark.conf.getOption(ConfKey))
+    spark.conf.getOption(ConfKey).map(InputPartitions.parse(ConfKey, _))
+      .getOrElse(InputPartitions.count(spark, Seq(inputDir)))
 
   /** Run `f` (which must START the streaming queries — a stream
     * CLONES the session conf at start and keeps it) with

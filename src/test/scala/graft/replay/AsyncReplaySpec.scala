@@ -1,19 +1,15 @@
 package graft.replay
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** R7/R8 (+ R5 in its real form): the asynchronous producer path —
-  * backpressure semaphore, per-partition async writer with record
-  * TTL, and the genuine un-acked low-watermark tracker. */
+/** R7 (+ R5 in its real form): the asynchronous producer plumbing
+  * that the Kinesis replay path runs on — the backpressure semaphore
+  * and the genuine un-acked low-watermark tracker. The Kinesis writer
+  * itself (R8, record TTL, drain and per-shard final watermark) is
+  * covered by [[AsyncKinesisWriterSpec]]. */
 class AsyncReplaySpec extends AnyFunSuite {
-
-  private val fixture = "src/test/resources/trips_tiny.jsonl"
-  private lazy val fixtureLines =
-    scala.io.Source.fromFile(fixture, "UTF-8").getLines().toSeq
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("watermark tracker advances only past the un-acked low watermark (R5)") {
     val t = new WatermarkTracker
@@ -69,89 +65,29 @@ class AsyncReplaySpec extends AnyFunSuite {
   }
 
   test("backpressure semaphore bounds outstanding records (R7)") {
-    val dir = tmp("async-bp")
     val gate = new CountDownLatch(1)
-    // writer whose (single) partition thread is blocked behind the gate
-    val w = new AsyncPartitionFileWriter(dir, partitions = 1,
-      execFactory = () => {
-        val e = Executors.newSingleThreadExecutor()
-        e.execute(() => gate.await())
-        e
-      })
+    // the completion side: one thread, blocked behind the gate, that
+    // acks each submitted record in order (as a writer thread would)
+    val acks = Executors.newSingleThreadExecutor()
+    acks.execute(() => gate.await())
     val sem = new BackpressureSemaphore(2)
     val submitted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val producer = new Thread(() => (1 to 5).foreach { i =>
+    val producer = new Thread(() => (1 to 5).foreach { _ =>
       sem.acquire()
       submitted.incrementAndGet()
-      w.addRecord(0, s"""{"n": $i}""").whenComplete((_, _) => sem.release())
+      acks.execute(() => sem.release())
     })
     producer.start()
     // the producer must stall at exactly maxOutstanding submissions
     Thread.sleep(300)
     assert(submitted.get() == 2, "producer was not backpressured at 2")
     assert(sem.outstanding == 2)
-    gate.countDown() // writer drains -> permits release -> producer finishes
+    gate.countDown() // acks drain -> permits release -> producer finishes
     producer.join(5000)
     assert(!producer.isAlive && submitted.get() == 5)
-    w.close()
-    assert(Files.readAllLines(
-      Paths.get(dir, "part-00000-00000.jsonl")).size() == 5)
+    sem.awaitDrained()
     assert(sem.outstanding == 0)
-  }
-
-  test("records queued past the TTL fail instead of being written (R8)") {
-    val dir = tmp("async-ttl")
-    var clock = 0L
-    val gate = new CountDownLatch(1)
-    val w = new AsyncPartitionFileWriter(dir, partitions = 1, ttlMs = 1000L,
-      now = () => clock,
-      execFactory = () => {
-        val e = Executors.newSingleThreadExecutor()
-        e.execute(() => gate.await())
-        e
-      })
-    val f = w.addRecord(0, """{"n": 1}""") // enqueued at clock=0
-    clock = 1001L // ages out in the queue
-    gate.countDown()
-    val err = intercept[java.util.concurrent.ExecutionException] {
-      f.get(5, TimeUnit.SECONDS)
-    }
-    assert(err.getCause.isInstanceOf[java.util.concurrent.TimeoutException])
-    val f2 = w.addRecord(0, """{"n": 2}""") // fresh record still writes
-    assert(f2.get(5, TimeUnit.SECONDS) != null)
-    w.close()
-    val lines = Files.readAllLines(Paths.get(dir, "part-00000-00000.jsonl"))
-    assert(lines.size() == 1 && lines.get(0).contains("\"n\": 2"))
-  }
-
-  test("async populate writes the same trip lines as sync; real low-watermark lines") {
-    val in = tmp("async-pop-in")
-    Files.writeString(Paths.get(in, "a.jsonl"),
-      fixtureLines.mkString("", "\n", "\n"))
-    def tripLines(dir: String): Seq[String] =
-      (0 until 3).flatMap(i => Files.readAllLines(
-          Paths.get(dir, f"part-$i%05d-00000.jsonl")).toArray.map(_.toString))
-        .filter(_.contains("\"trip\"")).sorted
-
-    val outSync = tmp("async-pop-sync")
-    new StreamPopulator(in, outSync, partitions = 3, speedup = 1e12,
-      sleep = _ => (), statsEveryMs = Long.MaxValue).populate()
-    val outAsync = tmp("async-pop-async")
-    val pop = new StreamPopulator(in, outAsync, partitions = 3,
-      speedup = 1e12, sleep = _ => (), statsEveryMs = Long.MaxValue,
-      maxOutstanding = 4)
-    val (events, skipped) = pop.populate()
-    assert(events == 15 && skipped == 1 && pop.failedWrites == 0)
-    assert(tripLines(outAsync) == tripLines(outSync))
-    // the final watermark is broadcast to every partition and equals
-    // the low watermark of the fully-acked stream = max event time
-    val maxTs = fixtureLines.flatMap(ReplayJson.timestampOf).max
-    (0 until 3).foreach { i =>
-      val lines = Files.readAllLines(
-        Paths.get(outAsync, f"part-$i%05d-00000.jsonl"))
-      val last = lines.get(lines.size() - 1)
-      assert(last.contains("\"watermark\""))
-      assert(last.contains(ReplayJson.toIso(maxTs)))
-    }
+    acks.shutdown()
+    assert(acks.awaitTermination(5, TimeUnit.SECONDS))
   }
 }

@@ -169,8 +169,10 @@ class WireTaxiSourceSpec extends AnyFunSuite with SparkSessionSpec {
       q.awaitTermination()
       spark.read.parquet(out).collect().map(_.toSeq).toSet
     }
-    val viaConnector = q1Of(
-      graft.streaming.StreamingTaxi.fromWireSource(spark, dir.toString))
+    // the connector parses source-side and skips malformed lines (R1);
+    // the codec's strict unknown-type layer still applies on top
+    val viaConnector = q1Of(graft.io.EventCodec.strictTyped(
+      spark.readStream.format("wire-taxi").load(dir.toString)))
     val viaText = q1Of(
       graft.streaming.StreamingTaxi.fromJsonFiles(spark, dir.toString))
     assert(viaConnector == viaText && viaConnector.nonEmpty)

@@ -43,28 +43,6 @@ class ProcessTaxiStreamAppSpec extends AnyFunSuite with SparkSessionSpec {
     assert(second.durationDocs == first.durationDocs)
   }
 
-  test("wire-source mode: the DSv2 connector path indexes the same docs") {
-    val wireDir = Files.createTempDirectory("appw-wire").toString
-    val workDir = Files.createTempDirectory("appw-work").toString
-    val indexDir = Files.createTempDirectory("appw-index").toString
-    val workDir2 = Files.createTempDirectory("appw-work2").toString
-    val indexDir2 = Files.createTempDirectory("appw-index2").toString
-    EventCodec.toJsonLines(SyntheticTrips.fromEvents(spark, "/root/testdata/sf0.001"))
-      .coalesce(1).write.mode("overwrite").text(wireDir)
-
-    val base = ProcessTaxiStream.Config(
-      inputDir = wireDir, workDir = workDir, indexDir = indexDir,
-      speedup = 1e12, replayPartitions = 2,
-      maxFilesPerTrigger = Some(1), once = true)
-    val viaText = ProcessTaxiStream.run(spark, base)
-    val viaWire = ProcessTaxiStream.run(spark, base.copy(
-      workDir = workDir2, indexDir = indexDir2, wireSource = true))
-    info(s"text: $viaText wire: $viaWire")
-    assert(viaWire.pickupDocs == viaText.pickupDocs)
-    assert(viaWire.durationDocs == viaText.durationDocs)
-    assert(viaWire.pickupDocs > 0)
-  }
-
   test("kinesis mode: the whole pipeline over the protocol indexes the same docs") {
     val wireDir = Files.createTempDirectory("appk-wire").toString
     val workDir = Files.createTempDirectory("appk-work").toString

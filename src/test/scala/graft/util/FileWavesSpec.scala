@@ -83,13 +83,14 @@ class FileWavesSpec extends AnyFunSuite with SparkSessionSpec {
   }
 
   test("the sizing rule clamps at 2 and at the session value, for both scales") {
-    assume(sys.env.get("SPARK_GRAFT_BATCH_PARTITIONS").isEmpty)
     val mb64 = InputPartitions.BytesPerPartition
     val tiny = sizedDir(1024L)
     val five = sizedDir(5 * mb64 - 1)
     def both(dir: String): (Int, Int) =
       (StreamScale.statePartitions(spark, dir),
-        BatchScale.inputPartitions(spark, Seq(dir)))
+        BatchScale.withInputScope(spark, Seq(dir)) {
+          spark.conf.get(BatchScale.ConfKey).toInt
+        })
     withConf("spark.sql.shuffle.partitions" -> "4") {
       assert(both(tiny) == ((2, 2)))
       assert(both(five) == ((4, 4)))
@@ -131,7 +132,7 @@ class FileWavesSpec extends AnyFunSuite with SparkSessionSpec {
       assert(e.getMessage.contains(BatchScale.ConfKey), e.getMessage)
     }
     val e = intercept[IllegalArgumentException](
-      InputPartitions.parse("SPARK_GRAFT_BATCH_PARTITIONS", "x"))
-    assert(e.getMessage.contains("SPARK_GRAFT_BATCH_PARTITIONS"))
+      InputPartitions.parse(BatchScale.ConfKey, " "))
+    assert(e.getMessage.contains(BatchScale.ConfKey), e.getMessage)
   }
 }
